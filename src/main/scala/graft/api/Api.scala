@@ -3,11 +3,30 @@ package graft.api
 import graft.enrich._
 import graft.ingest.Normalize
 import graft.model.Schemas
-import graft.operators.Upsert
 import graft.search.{EmailSearch, SearchFilters}
 import graft.sinks.MarkdownSink
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+
+/** What [[EmailEtlApi.importFull]] needs on the driver about one inbox
+  * line: its message, its place in the batch, the two ordering columns
+  * and its message's safe / unsafe attachment counts. */
+private final case class BatchLine(messageId: String, line: Long,
+    date: Option[java.sql.Timestamp], updatedAt: Option[java.sql.Timestamp],
+    safe: Int, unsafe: Int)
+
+private object BatchLine {
+  /** `orderBy(col("date").desc, col("message_id"))`: newest first, undated
+    * last, ties by message id in Spark's (UTF-8 byte) string order. */
+  val newestFirst: Ordering[BatchLine] = (a, b) => (a.date, b.date) match {
+    case (Some(x), Some(y)) if x.compareTo(y) != 0 => y.compareTo(x)
+    case (Some(_), None) => -1
+    case (None, Some(_)) => 1
+    case _ => UTF8String.fromString(a.messageId).compareTo(UTF8String.fromString(b.messageId))
+  }
+}
 
 /** SURVEY §2 I — the reference's query entry points (CLI verbs
   * reference: main.py:44-446; REST routes reference: src/api/server.py;
@@ -38,75 +57,123 @@ final class EmailEtlApi(
     * stats carry the full ImportStatus shape (models.py:224-233):
     * total_found / processed / skipped / failed /
     * attachments_processed / attachments_rejected, plus the engine's own
-    * embedded / total counters. */
+    * embedded / total counters.
+    *
+    * One pass: the inbox is parsed and normalized once into a persisted
+    * batch (the lines in range, with their attachment rows: O(batch));
+    * each table is written once, the store by one write that merges the
+    * batch and embeds the backlog. No counter has a query of its own:
+    * `failed` and `total` are observations on the parse and the store
+    * write, `embedded` one on the backlog page, and the rest follow from
+    * the batch's keys, which the merge needs on the driver anyway.
+    *
+    * Spark compiles each query's generated classes into one JVM-wide LRU
+    * cache, 100 classes unless the session sets
+    * `spark.sql.codegen.cache.maxEntries`. A sync is a handful of
+    * queries, each planned the same way every time, so the classes one
+    * sync needs fit that cache with room to spare and the next sync finds
+    * them there: only the stage that holds the start-date literal is
+    * compiled again. A sync that needed more than the cache holds would
+    * evict its own classes and recompile every one of them, every time;
+    * `SyncCodegenSpec` guards the bound. Keep a new step inside a query
+    * that already runs rather than adding one. */
   def importFull(inboxDir: String,
       maxResults: Option[Int] = None,
       startDate: Option[java.sql.Timestamp] = None,
       generateEmbeddings: Boolean = true): Map[String, Long] = {
-    val raw = Normalize.readRaw(spark, inboxDir)
     // failed = raw lines the normalizer cannot attribute to a message
-    // (corrupt JSON parses as an all-null row; reference counts these in
-    // stats['failed'], etl_pipeline.py:100-103)
-    val failed = raw.filter(col("id").isNull).count()
-    val normalized = Normalize.emails(raw).dropDuplicates("message_id")
-    val dated = startDate
-      .map(d => normalized.filter(col("date") >= lit(d)))
+    // (corrupt or cut-off JSON parses with a null id; reference counts
+    // these in stats['failed'], etl_pipeline.py:100-103)
+    val parsed = Observation()
+    val raw = Normalize.readRaw(spark, inboxDir)
+      .observe(parsed, sum(col("id").isNull.cast("long")).as("failed"))
+    val normalized = Normalize.emailsWithAttachments(raw)
+    val lines = startDate.map(d => normalized.filter(col("date") >= lit(d)))
       .getOrElse(normalized)
-    val incoming = maxResults
-      .map(n => dated.orderBy(col("date").desc, col("message_id"))
-        .limit(math.max(0, n)))
-      .getOrElse(dated)
-    val fs = new org.apache.hadoop.fs.Path(emailsPath)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val storeExists = fs.exists(new org.apache.hadoop.fs.Path(emailsPath))
-    // skipped = already in the store (reference skips re-processing them,
-    // etl_pipeline.py:117-121; the merge still refreshes their row, which
-    // is the A4 upsert contract)
-    val skipped =
-      if (storeExists)
-        incoming.join(emails.select("message_id"), Seq("message_id"), "left_semi").count()
-      else 0L
-    val totalFound = incoming.count()
-    val merged =
-      if (storeExists)
-        Upsert.mergeByKey(emails, incoming, "message_id", "updated_at")
-      else incoming
-    val staging = s"${emailsPath}__staging"
-    merged.write.mode("overwrite").parquet(staging)
-    fs.delete(new org.apache.hadoop.fs.Path(emailsPath), true)
-    fs.rename(new org.apache.hadoop.fs.Path(staging), new org.apache.hadoop.fs.Path(emailsPath))
+      .withColumn("__line", monotonically_increasing_id())
+      .persist()
+    try {
+      // One small row per line comes to the driver, as a broadcast join
+      // would ship it. The first line of a message stands for it, so a
+      // duplicate line adds nothing; `maxResults` keeps the newest
+      // messages; the store is asked only for its versions of these keys.
+      val all = lines.select(col("message_id"), col("__line"), col("date"),
+          col("updated_at"),
+          size(filter(col("attachments"), a => a.getField("is_safe"))),
+          size(filter(col("attachments"), a => !a.getField("is_safe"))))
+        .collect().map(r => BatchLine(r.getString(0), r.getLong(1),
+          Option(r.getTimestamp(2)), Option(r.getTimestamp(3)), r.getInt(4), r.getInt(5)))
+      val messages = all.groupBy(_.messageId).values.map(_.minBy(_.line)).toSeq
+      val chosen = maxResults.fold(messages)(n =>
+        messages.sorted(BatchLine.newestFirst).take(math.max(0, n)))
+      val keys = chosen.map(_.messageId)
+      val storeExists = tableExists("emails")
+      val stored: Map[String, Option[java.sql.Timestamp]] =
+        if (!storeExists || keys.isEmpty) Map.empty
+        else emails.filter(col("message_id").isin(keys: _*))
+          .select("message_id", "updated_at").collect()
+          .map(r => r.getString(0) -> Option(r.getTimestamp(1))).toMap
+      // A4, in Upsert.mergeByKey's order: the greater `updated_at` wins,
+      // null ranks last, and the incoming row wins a tie
+      val lost = chosen.filter(m => stored.get(m.messageId).flatten
+        .exists(v => m.updatedAt.forall(v.after))).map(_.messageId).toSet
+      val fresh = chosen.filterNot(m => stored.contains(m.messageId))
 
-    // attachments of THIS batch's emails (email_id = surrogate of the
-    // message_id); merged with any prior table so incremental imports
-    // never drop earlier attachments
-    val attPath = s"$storeDir/attachments"
-    val batchAtts = Normalize.attachments(raw)
-      .join(incoming.select(col("id").as("email_id")), Seq("email_id"), "left_semi")
-    val attsProcessed = batchAtts.filter(col("is_safe")).count()
-    val attsRejected = batchAtts.filter(!col("is_safe")).count()
-    val allAtts =
-      if (fs.exists(new org.apache.hadoop.fs.Path(attPath)))
-        spark.read.parquet(attPath).unionByName(batchAtts).dropDuplicates("id")
-      else batchAtts
-    val attStaging = s"${attPath}__staging"
-    allAtts.write.mode("overwrite").parquet(attStaging)
-    fs.delete(new org.apache.hadoop.fs.Path(attPath), true)
-    fs.rename(new org.apache.hadoop.fs.Path(attStaging), new org.apache.hadoop.fs.Path(attPath))
+      val incoming =
+        if (chosen.size == all.length) lines else only(lines, "__line", chosen.map(_.line))
+      val arriving = except(incoming, "message_id", lost)
+        .select(Schemas.emailSchema.fieldNames.map(col).toSeq: _*)
+      val merged =
+        if (!storeExists) arriving
+        else except(emails, "message_id", keys.filterNot(lost)).unionByName(arriving)
+      val embedded = Observation()
+      val store =
+        if (!generateEmbeddings) merged
+        else withEmbedded(merged,
+          backlogPage(merged).observe(embedded, count(lit(1)).as("embedded")))
+      val wrote = Observation()
+      replaceTable("emails", store.observe(wrote, count(lit(1)).as("total")))
 
-    Normalize.auditRows(incoming, "imported")
-      .write.mode("append").parquet(s"$storeDir/audit")
-    MarkdownSink.writeArchive(emails, s"$storeDir/markdown")
-    val embedded = if (generateEmbeddings) embedBacklog() else 0L
-    Map(
-      "total_found" -> totalFound,
-      "processed" -> (totalFound - skipped),
-      "skipped" -> skipped,
-      "failed" -> failed,
-      "attachments_processed" -> attsProcessed,
-      "attachments_rejected" -> attsRejected,
-      "embedded" -> embedded,
-      "total" -> emails.count())
+      // attachments of every line of THIS batch's emails (email_id =
+      // surrogate of the message_id); merged with any prior table so
+      // incremental imports never drop earlier attachments
+      val batchAtts =
+        (if (chosen.size == messages.size) lines else only(lines, "message_id", keys))
+          .select(explode(col("attachments")).as("a")).select("a.*")
+      replaceTable("attachments",
+        if (!tableExists("attachments")) batchAtts
+        else {
+          val byId = Window.partitionBy(col("id")).orderBy(col("id"))
+          attachments.unionByName(batchAtts)
+            .withColumn("__n", row_number().over(byId))
+            .filter(col("__n") === 1).drop("__n")
+        })
+
+      Normalize.auditRows(incoming, "imported")
+        .write.mode("append").parquet(s"$storeDir/audit")
+      MarkdownSink.write(emails, s"$storeDir/markdown")
+
+      def observed(o: Observation, key: String): Long =
+        Option(o.get.getOrElse(key, null)).fold(0L)(_.asInstanceOf[Number].longValue)
+      Map(
+        "total_found" -> chosen.size.toLong,
+        "processed" -> fresh.size.toLong,
+        "skipped" -> (chosen.size - fresh.size).toLong,
+        "failed" -> observed(parsed, "failed"),
+        "attachments_processed" -> fresh.map(_.safe.toLong).sum,
+        "attachments_rejected" -> fresh.map(_.unsafe.toLong).sum,
+        "embedded" -> (if (generateEmbeddings) observed(embedded, "embedded") else 0L),
+        "total" -> observed(wrote, "total"))
+    } finally lines.unpersist()
   }
+
+  /** Rows of `df` whose `c` is one of `values`. */
+  private def only(df: DataFrame, c: String, values: Seq[Any]): DataFrame =
+    if (values.isEmpty) df.limit(0) else df.filter(col(c).isin(values: _*))
+
+  /** Rows of `df` whose `c` is none of `values`. */
+  private def except(df: DataFrame, c: String, values: Iterable[Any]): DataFrame =
+    if (values.isEmpty) df else df.filter(!col(c).isin(values.toSeq: _*))
 
   /** Incremental sync (reference: src/etl_pipeline.py:233-245): import
     * everything dated at or after the store's latest email — the `>=`
@@ -115,10 +182,8 @@ final class EmailEtlApi(
     * a full import, exactly like the reference. */
   def syncIncremental(inboxDir: String,
       generateEmbeddings: Boolean = true): Map[String, Long] = {
-    val fs = new org.apache.hadoop.fs.Path(emailsPath)
-      .getFileSystem(spark.sessionState.newHadoopConf())
     val latest: Option[java.sql.Timestamp] =
-      if (fs.exists(new org.apache.hadoop.fs.Path(emailsPath)))
+      if (tableExists("emails"))
         Option(emails.agg(max(col("date"))).collect()(0).getTimestamp(0))
       else None
     importFull(inboxDir, startDate = latest,
@@ -127,23 +192,43 @@ final class EmailEtlApi(
 
   /** Embedding pass: B4 backlog → H1 batched embed → A9 column upsert. */
   def embedBacklog(): Long = {
-    val backlog = search.embeddingBacklog()
-      .withColumn("embed_text", graft.functions.EmailFunctions.embeddingText(
-        col("subject"), col("sender_name"), col("sender"), col("recipients"),
-        col("date"), coalesce(col("body_markdown"), col("body_plain")), col("labels")))
-      .select("id", "embed_text")
-    val n = backlog.count()
-    if (n > 0) {
-      val vecs = Enrichment.embedBacklog(backlog, embedder)
-      val updated = Upsert.updateColumn(emails, vecs, "id", "embedding")
-      val staging = s"${emailsPath}__staging"
-      updated.write.mode("overwrite").parquet(staging)
-      val fs = new org.apache.hadoop.fs.Path(emailsPath)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(emailsPath), true)
-      fs.rename(new org.apache.hadoop.fs.Path(staging), new org.apache.hadoop.fs.Path(emailsPath))
-    }
+    val page = backlogPage(emails)
+    val n = page.count()
+    if (n > 0) replaceTable("emails", withEmbedded(emails, page))
     n
+  }
+
+  /** B4: the backlog page of `rows` (emails-shaped) — rows with a null
+    * embedding and a body, newest first, at most
+    * `Schemas.EmbeddingBacklogPage` — as (id, embed_text). */
+  private def backlogPage(rows: DataFrame): DataFrame =
+    new EmailSearch(rows).embeddingBacklog()
+      .select(col("id"), graft.functions.EmailFunctions.embeddingText(
+        col("subject"), col("sender_name"), col("sender"), col("recipients"),
+        col("date"), coalesce(col("body_markdown"), col("body_plain")), col("labels"))
+        .as("embed_text"))
+
+  /** `rows` with the embedding of every `page` row set (H1 + A9). A page
+    * holds one row per message, so it joins back by `id` as it is,
+    * broadcast. */
+  private def withEmbedded(rows: DataFrame, page: DataFrame): DataFrame = {
+    val vecs = Enrichment.embedBacklog(page, embedder).withColumnRenamed("embedding", "__vec")
+    rows.join(broadcast(vecs), Seq("id"), "left")
+      .select(Schemas.emailSchema.fieldNames.map {
+        case "embedding" => coalesce(col("__vec"), col("embedding")).as("embedding")
+        case c => col(c)
+      }.toSeq: _*)
+  }
+
+  /** Stage-and-swap of one store table: write `df` beside the table, then
+    * replace the table with it. `df` may read the table it replaces. */
+  private def replaceTable(name: String, df: DataFrame): Unit = {
+    val live = new org.apache.hadoop.fs.Path(s"$storeDir/$name")
+    val staging = new org.apache.hadoop.fs.Path(s"$storeDir/${name}__staging")
+    df.write.mode("overwrite").parquet(staging.toString)
+    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.delete(live, true)
+    fs.rename(staging, live)
   }
 
   /** `search semantic` (reference: main.py:239-269; limit 10 ∈ [1,100]). */

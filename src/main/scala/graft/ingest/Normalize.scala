@@ -80,6 +80,15 @@ object Normalize {
     * created_at/updated_at in tests. */
   def emails(raw: DataFrame, provider: String = "gmail",
       providerAccount: String = "default",
+      now: java.sql.Timestamp = java.sql.Timestamp.from(java.time.Instant.EPOCH)): DataFrame =
+    emailsWithAttachments(raw, provider, providerAccount, now).drop("attachments")
+
+  /** [[emails]] plus `attachments`: the message's canonical attachment
+    * rows as an array. One MIME walk feeds the bodies, `has_attachments`
+    * and the attachment rows, so an import that needs both tables plans
+    * the walk once. */
+  def emailsWithAttachments(raw: DataFrame, provider: String = "gmail",
+      providerAccount: String = "default",
       now: java.sql.Timestamp = java.sql.Timestamp.from(java.time.Instant.EPOCH)): DataFrame = {
     val payload = col("payload")
     val parts = allParts(payload)
@@ -115,33 +124,51 @@ object Normalize {
         lit(provider).as("provider"),
         lit(providerAccount).as("provider_account"),
         lit(now).as("created_at"),
-        lit(now).as("updated_at"))
+        lit(now).as("updated_at"),
+        attachmentParts(parts).as("attachments"))
+      // a projection of its own: inside the row-building lambdas of the
+      // select above, `id` resolves to the surrogate defined beside them
+      .withColumn("attachments", attachmentRows(col("message_id"), col("attachments")))
   }
 
   /** Canonical `attachments` rows with the F16 validation report applied
     * (reference: src/etl_pipeline.py:153-194 + src/security.py:57-110). */
-  def attachments(raw: DataFrame): DataFrame = {
-    val parts = allParts(col("payload"))
-    val exploded = raw
+  def attachments(raw: DataFrame): DataFrame =
+    raw
       .filter(col("id").isNotNull)
       .select(
         col("id").as("message_id"),
-        explode(attachmentParts(parts)).as("part"))
-    val data = fromBase64(translate(col("part.body.data"), "-_", "+/"))
-    val report = validationReport(col("part.filename"), col("part.mimeType"), data)
-    exploded
-      .select(
-        xxhash64(concat_ws("|", col("message_id"),
-          coalesce(col("part.partId"), lit("")))).as("id"),
-        surrogateId(col("message_id")).as("email_id"),
-        sanitizeFilename(col("part.filename")).as("filename"),
-        col("part.mimeType").as("mime_type"),
-        report.getField("size_bytes").as("size_bytes"),
-        report.getField("content_hash").as("content_hash"),
-        report.getField("is_safe").as("is_safe"),
-        report.getField("scan_results").as("scan_results"),
-        concat(col("message_id"), lit("/"),
-          sanitizeFilename(col("part.filename"))).as("file_path"))
+        explode(attachmentParts(allParts(col("payload")))).as("part"))
+      .select(attachmentRow(col("message_id"), checkedPart(col("part"))).as("a"))
+      .select("a.*")
+
+  /** One message's `attachments` rows as an array, in part order, from
+    * its attachment parts. Each part is checked in a lambda of its own,
+    * so its validation report is taken once, not once per field. */
+  private def attachmentRows(messageId: Column, parts: Column): Column =
+    transform(transform(parts, p => checkedPart(p)), c => attachmentRow(messageId, c))
+
+  /** An attachment part with its sanitized name and validation report. */
+  private def checkedPart(p: Column): Column = {
+    val data = fromBase64(translate(p.getField("body").getField("data"), "-_", "+/"))
+    struct(p.as("part"), sanitizeFilename(p.getField("filename")).as("name"),
+      validationReport(p.getField("filename"), p.getField("mimeType"), data).as("report"))
+  }
+
+  /** The `attachments` row of a [[checkedPart]]. */
+  private def attachmentRow(messageId: Column, c: Column): Column = {
+    val report = c.getField("report")
+    struct(
+      xxhash64(concat_ws("|", messageId,
+        coalesce(c.getField("part").getField("partId"), lit("")))).as("id"),
+      surrogateId(messageId).as("email_id"),
+      c.getField("name").as("filename"),
+      c.getField("part").getField("mimeType").as("mime_type"),
+      report.getField("size_bytes").as("size_bytes"),
+      report.getField("content_hash").as("content_hash"),
+      report.getField("is_safe").as("is_safe"),
+      report.getField("scan_results").as("scan_results"),
+      concat(messageId, lit("/"), c.getField("name")).as("file_path"))
   }
 
   /** A8 audit rows for an import batch (reference: src/database.py:321-331,

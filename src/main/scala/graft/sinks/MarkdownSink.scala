@@ -30,11 +30,19 @@ object MarkdownSink {
 
   /** A5: write the rendered archive partitioned by year/month and return
     * the derived index (reference: markdown_storage.py:67-132; index
-    * entries markdown_storage.py:122-129). */
+    * entries markdown_storage.py:122-129). The returned index reads the
+    * just-written parquet: already materialized, no lingering cached
+    * blocks, no recompute. */
   def writeArchive(emails: DataFrame, outDir: String): DataFrame = {
-    // render once: the archive write, the index write, and the returned
-    // frame all consume the same pipeline — unpersisted, the markdown
-    // rendering would run 2-3×
+    write(emails, outDir)
+    emails.sparkSession.read.parquet(s"$outDir/index")
+  }
+
+  /** [[writeArchive]] without reading the index back. */
+  def write(emails: DataFrame, outDir: String): Unit = {
+    // render once: the archive write and the index write both consume
+    // the same pipeline — unpersisted, the markdown rendering would run
+    // twice
     val rendered = renderMarkdown(emails)
       .withColumn("year", year(col("date")))
       .withColumn("month", month(col("date")))
@@ -49,9 +57,6 @@ object MarkdownSink {
       col("sender"), col("date"), col("has_attachments"))
       .write.mode("overwrite").parquet(s"$outDir/index")
     rendered.unpersist()
-    // the returned index reads the just-written parquet: already
-    // materialized, no lingering cached blocks, no recompute
-    emails.sparkSession.read.parquet(s"$outDir/index")
   }
 
   /** A6: point read by message_id — index lookup + content join +
