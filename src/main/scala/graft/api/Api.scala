@@ -28,6 +28,11 @@ private object BatchLine {
   }
 }
 
+/** One context email of [[EmailEtlApi.ask]]: its message id, and its
+  * summary (id, message_id, subject, sender, sender_name, date) as the
+  * JSON object Spark writes for that row. */
+final case class AskSource(messageId: String, summary: String)
+
 /** SURVEY §2 I — the reference's query entry points (CLI verbs
   * reference: main.py:44-446; REST routes reference: src/api/server.py;
   * MCP tools reference: src/api/mcp_tools.py:13-225) as one programmatic
@@ -44,7 +49,13 @@ final class EmailEtlApi(
     answerer: Answerer = new StubAnswerer) {
 
   private def emailsPath = s"$storeDir/emails"
-  def emails: DataFrame = spark.read.parquet(emailsPath)
+
+  /** The `emails` table, read with its declared schema. A read that infers
+    * the schema runs a Spark job over the files' footers each time the
+    * frame is built, and that job cost a REST search more than the search
+    * itself. [[dbInit]] and [[dbTest]] read the files' own schema on
+    * purpose: checking it is their job. */
+  def emails: DataFrame = spark.read.schema(Schemas.emailSchema).parquet(emailsPath)
   private def search = new EmailSearch(emails)
 
   /** `import full` (reference: main.py:163-207, src/etl_pipeline.py:32-91):
@@ -231,26 +242,30 @@ final class EmailEtlApi(
     fs.rename(staging, live)
   }
 
-  /** `search semantic` (reference: main.py:239-269; limit 10 ∈ [1,100]). */
+  /** `search semantic` (reference: main.py:239-269; limit 10 ∈ [1,100]).
+    * `columns` are the hits' columns ([[EmailSearch.hybridSearch]]). */
   def searchSemantic(query: String, limit: Int = 10,
-      filters: SearchFilters = SearchFilters()): DataFrame = {
+      filters: SearchFilters = SearchFilters(),
+      columns: Seq[String] = EmailSearch.RankedColumns): DataFrame = {
     val k = math.max(1, math.min(limit, 100))
     val qv = embedder.embedBatch(Seq(query)).head.toSeq
-    search.hybridSearch(qv, query, k, filters)
+    search.hybridSearch(qv, query, k, filters, columns)
   }
 
   /** `search ask` / RAG (reference: main.py:272-296; context 5 ∈ [1,20]).
-    * Retrieval is one Catalyst plan; only the ≤20 context rows cross to
-    * the driver for the pluggable answer call — same boundary as the
-    * reference (SURVEY §3.3). */
-  def ask(question: String, contextLimit: Int = 5): (String, Seq[String]) = {
+    * Retrieval is one Catalyst plan and one collect: the ≤20 context rows
+    * cross to the driver once, each as its context block, message id and
+    * summary, for the pluggable answer call — same boundary as the
+    * reference (SURVEY §3.3). Sources come in rank order. */
+  def ask(question: String, contextLimit: Int = 5): (String, Seq[AskSource]) = {
     val k = math.max(1, math.min(contextLimit, 20))
     val qv = embedder.embedBatch(Seq(question)).head.toSeq
-    val hits = search.searchSimilar(qv, k) // full rows incl. body_plain
-    val blocks = Enrichment.ragContext(hits)
-      .select("context_block").collect().map(_.getString(0)).toSeq
-    val sources = hits.select("message_id").collect().map(_.getString(0)).toSeq
-    (answerer.answer(question, blocks), sources)
+    val hits = Enrichment.ragContext(search.searchSimilar(qv, k))
+      .select(col("context_block"), col("message_id"), to_json(struct(
+        Seq("id", "message_id", "subject", "sender", "sender_name", "date").map(col): _*)))
+      .collect()
+    (answerer.answer(question, hits.map(_.getString(0)).toSeq),
+      hits.map(r => AskSource(r.getString(1), r.getString(2))).toSeq)
   }
 
   /** `analyze categorize` (reference: main.py:305-345; limit 10 ∈ [1,50]). */
@@ -281,8 +296,10 @@ final class EmailEtlApi(
     search.patterns(groupBy, days)
 
   /** Attachment metadata table (reference: get_email_by_id MCP tool,
-    * src/api/mcp_tools.py:166-183 include_attachments). */
-  def attachments: DataFrame = spark.read.parquet(s"$storeDir/attachments")
+    * src/api/mcp_tools.py:166-183 include_attachments), read with its
+    * declared schema like [[emails]]. */
+  def attachments: DataFrame =
+    spark.read.schema(Schemas.attachmentSchema).parquet(s"$storeDir/attachments")
 
   /** B1 point lookup by surrogate id (reference: mcp_tools.py:166-183). */
   def emailById(id: Long): DataFrame = search.byId(id)
@@ -531,7 +548,7 @@ object Cli {
       new EmailEtlApi(spark, store).searchSemantic(query, k).show(k, truncate = false)
     case "search" :: "ask" :: store :: question :: Nil =>
       val (answer, sources) = new EmailEtlApi(spark, store).ask(question)
-      println(answer); println(s"sources: ${sources.mkString(", ")}")
+      println(answer); println(s"sources: ${sources.map(_.messageId).mkString(", ")}")
     case "analyze" :: "categorize" :: store :: rest =>
       val k = rest.headOption.map(_.toInt).getOrElse(10)
       new EmailEtlApi(spark, store).categorize(k).show(k, truncate = false)

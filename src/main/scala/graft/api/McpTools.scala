@@ -214,15 +214,13 @@ object McpTools {
       case "search_emails" =>
         val filters = graft.search.SearchFilters(
           dateFrom = tsOf("date_from"), dateTo = tsOf("date_to"))
-        val hits = api.searchSemantic(str("query"), int("limit", 10), filters)
-        rows(
-          if (!bool("include_content", d = false)) hits
-          else hits.join(
-            api.emails.select(col("id"), col("body_plain")), Seq("id"), "left"))
+        rows(api.searchSemantic(str("query"), int("limit", 10), filters,
+          graft.search.EmailSearch.RankedColumns ++
+            (if (bool("include_content", d = false)) Seq("body_plain") else Nil)))
       case "ask_email_question" =>
         val (answer, sources) = api.ask(str("question"), int("context_limit", 5))
         JObject("answer" -> JString(answer),
-          "sources" -> JArray(sources.map(JString(_)).toList),
+          "sources" -> JArray(sources.map(s => JString(s.messageId)).toList),
           "context_email_count" -> JInt(sources.size))
       case "categorize_emails" =>
         rows(api.categorize(int("limit", 10)))

@@ -3,7 +3,7 @@ package graft.api
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.search.SearchFilters
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -15,8 +15,11 @@ import org.json4s.jackson.JsonMethods
   * that ships with Spark — zero added dependencies, per the environment
   * contract. The server is a transport only: every route body is one
   * [[EmailEtlApi]] call (itself one Catalyst plan + the documented ≤20-row
-  * driver boundary), and `DataFrame → JSON` uses Spark's own `toJSON` so
-  * row serialization stays in the engine.
+  * driver boundary) per result it returns — `/api/status` and MCP
+  * `get_email_by_id` return two — and `DataFrame → JSON` uses Spark's own
+  * `toJSON` so row serialization stays in the engine. A route never reads
+  * the store again to decorate a call's rows: a column it needs is asked
+  * of the call's own plan (`ReadPathJobsSpec` counts the jobs).
   *
   * Routes mirrored (names, defaults, clamps follow the reference):
   *  - GET  /health                 → {"status": "healthy"}
@@ -192,21 +195,12 @@ object RestServer {
         dateFrom = ts(body \ "date_from"), dateTo = ts(body \ "date_to"))
       val includeContent = (body \ "include_content").extractOpt[Boolean]
         .getOrElse(false)
-      val hits = api.searchSemantic(query, limit, filters)
-      // EmailSummary shape (models.py:133-151): rejoin the store for the
-      // summary fields the ranked projection doesn't carry;
-      // include_content additionally attaches the full plain body
-      val extra = Seq("sender_name", "has_attachments", "labels",
-        "markdown_path") ++ (if (includeContent) Seq("body_plain") else Nil)
-      val summaries = hits
-        .join(api.emails.select((Seq("id") ++ extra).map(col): _*), Seq("id"))
-        .select((Seq("id", "message_id", "subject", "sender", "sender_name",
-          "date", "has_attachments", "labels", "similarity", "markdown_path") ++
-          (if (includeContent) Seq("body_plain") else Nil) ++
-          Seq("score")).map(col): _*)
-        .orderBy(col("score").desc, col("message_id"))
-        .drop("score")
-      val rows = dfJson(summaries)
+      // EmailSummary shape (models.py:133-151), carried by the ranked
+      // plan itself; include_content adds the full plain body
+      val rows = dfJson(api.searchSemantic(query, limit, filters,
+        Seq("id", "message_id", "subject", "sender", "sender_name", "date",
+          "has_attachments", "labels", "similarity", "markdown_path") ++
+          (if (includeContent) Seq("body_plain") else Nil)))
       JObject(
         "query" -> JString(query),
         "results" -> JArray(rows.toList),
@@ -217,18 +211,15 @@ object RestServer {
       val question = (body \ "question").extractOpt[String]
         .getOrElse(throw BadRequest("missing field: question"))
       val k = (body \ "context_limit").extractOpt[Int].getOrElse(5)
-      val (answer, sourceIds) = api.ask(question, k)
-      val sources =
-        if (sourceIds.isEmpty) Nil
-        else dfJson(api.emails
-          .filter(col("message_id").isin(sourceIds.map(x => x: Any): _*))
-          .select("id", "message_id", "subject", "sender", "sender_name", "date")
-          .orderBy("message_id"))
+      val (answer, sources) = api.ask(question, k)
+      // summaries in message_id order, as Spark sorts strings (UTF-8 bytes)
+      val byId = sources.sortWith((a, b) => UTF8String.fromString(a.messageId)
+        .compareTo(UTF8String.fromString(b.messageId)) < 0)
       JObject(
         "question" -> JString(question),
         "answer" -> JString(answer),
-        "sources" -> JArray(sources.toList),
-        "context_email_count" -> JInt(sourceIds.size))
+        "sources" -> JArray(byId.map(s => JsonMethods.parse(s.summary)).toList),
+        "context_email_count" -> JInt(sources.size))
     }
 
     route(srv, "/api/analyze/categorize", "POST", count) { body =>

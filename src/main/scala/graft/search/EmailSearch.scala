@@ -145,9 +145,12 @@ class EmailSearch(emails: DataFrame) {
     * Stemming is the full Snowball/Porter2 (what the reference's
     * `to_tsvector('english', …)` runs — scripts/init_db.sql:66-71), so
     * ranking agrees with Postgres on morphology the stem-lite spec
-    * misses; the oracle-checked registry twin stays on stem-lite. */
+    * misses; the oracle-checked registry twin stays on stem-lite.
+    * Returns `columns` of the top `k` rows by score, then `message_id`;
+    * the sort keys need not be among them. */
   def hybridSearch(queryVec: Seq[Float], queryText: String, k: Int = 10,
-      filters: SearchFilters = SearchFilters()): DataFrame = {
+      filters: SearchFilters = SearchFilters(),
+      columns: Seq[String] = EmailSearch.RankedColumns): DataFrame = {
     val base = applyFilters(emails.filter(col("embedding").isNotNull), filters)
     base
       .withColumn("similarity", cosineSim(col("embedding"), typedlit(queryVec)))
@@ -158,9 +161,16 @@ class EmailSearch(emails: DataFrame) {
       .withColumn("score",
         lit(Schemas.HybridVectorWeight) * col("similarity") +
           lit(Schemas.HybridTextWeight) * col("rank"))
-      .select(col("id"), col("message_id"), col("subject"), col("sender"),
-        col("date"), col("provider"), col("similarity"), col("rank"), col("score"))
+      .select(columns.map(col): _*)
       .orderBy(col("score").desc, col("message_id"))
       .limit(k)
   }
+}
+
+object EmailSearch {
+  /** The columns [[EmailSearch.hybridSearch]] returns unless asked for
+    * others. Any `emails` column may be asked for: it rides through the
+    * top-k, so a caller never joins the hits back to the store. */
+  val RankedColumns: Seq[String] = Seq("id", "message_id", "subject", "sender",
+    "date", "provider", "similarity", "rank", "score")
 }

@@ -74,7 +74,8 @@ object IncrementalSync {
         // pick an arbitrary row instead.
         val merged =
           if (fs.exists(storePath)) {
-            val existing = batch.sparkSession.read.parquet(storeDir)
+            // declared schema: inferring it would cost a job per batch
+            val existing = batch.sparkSession.read.schema(Schemas.emailSchema).parquet(storeDir)
             Upsert.mergeByKey(existing, batch, "message_id", "updated_at")
           } else Upsert.mergeByKey(batch.limit(0), batch, "message_id", "updated_at")
         // Stage-and-swap: never overwrite the directory being read mid-plan,
