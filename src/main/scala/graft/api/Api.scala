@@ -78,6 +78,11 @@ final class EmailEtlApi(
     * write, `embedded` one on the backlog page, and the rest follow from
     * the batch's keys, which the merge needs on the driver anyway.
     *
+    * Every later query of the import reads the persisted batch and so
+    * carries its plan: the batch plan's size is paid when the batch is
+    * analyzed and cached, and again in the plan info and explain strings
+    * of each of those queries. `NormalizeSpec` bounds that size.
+    *
     * Spark compiles each query's generated classes into one JVM-wide LRU
     * cache, 100 classes unless the session sets
     * `spark.sql.codegen.cache.maxEntries`. A sync is a handful of

@@ -1,6 +1,7 @@
 package graft.ingest
 
 import graft.functions.EmailFunctions._
+import graft.functions.MimeParts.mimeParts
 import graft.model.Schemas
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -9,45 +10,29 @@ import org.apache.spark.sql.functions._
   * src/providers/gmail/provider.py:227-342 `_parse_message` +
   * `_parse_payload`).
   *
-  * The MIME tree (`payload.parts[]`, recursively nested) is flattened to
-  * the schema-declared bound (`Schemas.mimeDepth`, 8 levels — Spark
-  * schemas cannot be recursive, so the bound is declared once and the
-  * walk derives from it), each level projected onto a common (partId,
-  * mimeType, filename, body) struct so the arrays concatenate.
-  * First-match-wins body selection and the filename⇒attachment rule
-  * follow the reference exactly.
+  * The MIME tree (`payload.parts[]`, recursively nested) is flattened by
+  * one native expression, [[graft.functions.MimeParts]], to the
+  * schema-declared bound (`Schemas.mimeDepth`, 8 levels — Spark schemas
+  * cannot be recursive, so the bound is declared once and the walk
+  * derives it from the payload's type): every part as one (partId,
+  * mimeType, filename, body) struct, breadth-first. First-match-wins body
+  * selection and the filename⇒attachment rule follow the reference
+  * exactly.
   *
-  * Everything is declarative Column work — one narrow projection stage
-  * over the raw scan, no UDFs, no driver loops; at 100 TB this is a
-  * map-only stage with full predicate/column pushdown below it.
+  * The walk is native because its uses multiply: the bodies (and the
+  * markdown built from both of them, twice each), `has_attachments` and
+  * the attachment rows read the parts in eight places. Written as Column
+  * functions the walk was ~470 plan nodes and each use re-embedded all of
+  * them (a 5,400-node plan that every import analyzed, optimized and
+  * cached); as one expression each use is one node over the payload.
+  * The rest is Column work — one narrow projection stage over the raw
+  * scan, no UDFs, no driver loops.
   */
 object Normalize {
 
   /** Read raw fixture JSON (one message per line) with the declared schema. */
   def readRaw(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(Schemas.rawMessageSchema).json(path)
-
-  private def partStruct(p: Column): Column = struct(
-    p.getField("partId").as("partId"),
-    p.getField("mimeType").as("mimeType"),
-    p.getField("filename").as("filename"),
-    p.getField("body").as("body"))
-
-  /** All MIME parts (payload itself + every nested level the schema
-    * declares, [[graft.model.Schemas.mimeDepth]] deep) as one array.
-    * Level k+1 is derived from level k's raw structs, stopping before the
-    * schema's leaf level (which has no `parts` field); depth beyond real
-    * nesting costs nothing — the arrays are empty from the first absent
-    * level down. */
-  def allParts(payload: Column): Column = {
-    val level1 = coalesce(payload.getField("parts"), array())
-    val rawLevels = Iterator.iterate(level1)(lvl =>
-      flatten(filter(
-        transform(lvl, p => coalesce(p.getField("parts"), array())),
-        a => a.isNotNull)))
-      .take(graft.model.Schemas.mimeDepth - 1).toSeq
-    concat(array(partStruct(payload)) +: rawLevels.map(transform(_, partStruct(_))): _*)
-  }
 
   /** First part matching a mime type that is body-like (no filename) and
     * has inline data — first-match-wins (reference: provider.py:303-329). */
@@ -91,7 +76,7 @@ object Normalize {
       providerAccount: String = "default",
       now: java.sql.Timestamp = java.sql.Timestamp.from(java.time.Instant.EPOCH)): DataFrame = {
     val payload = col("payload")
-    val parts = allParts(payload)
+    val parts = mimeParts(payload)
     val from = headerValue(payload, "From")
     val dateHdr = headerValue(payload, "Date")
     val bodyPlain = urlsafeB64Text(firstBodyData(parts, "text/plain"))
@@ -138,7 +123,7 @@ object Normalize {
       .filter(col("id").isNotNull)
       .select(
         col("id").as("message_id"),
-        explode(attachmentParts(allParts(col("payload")))).as("part"))
+        explode(attachmentParts(mimeParts(col("payload")))).as("part"))
       .select(attachmentRow(col("message_id"), checkedPart(col("part"))).as("a"))
       .select("a.*")
 

@@ -106,8 +106,9 @@ object Schemas {
     StructField("provider", StringType),
     StructField("created_at", TimestampType)))
 
-  /** MIME nesting bound declared in the schema AND walked by
-    * `Normalize.allParts` — keep the two in lockstep via this constant.
+  /** MIME nesting bound declared in the schema, the one place that
+    * declares it: `graft.functions.MimeParts` walks the levels the
+    * payload's type has.
     * Spark schemas cannot be recursive, so "arbitrary depth" means "a
     * declared bound comfortably beyond anything real mail produces":
     * multipart/mixed > related > alternative > signed is 4; 8 covers

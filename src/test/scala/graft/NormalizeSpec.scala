@@ -145,6 +145,16 @@ class NormalizeSpec extends SparkSpec {
     assert(r.getAs[String]("body_plain") == "deep body")
   }
 
+  test("the import's normalize plan stays small: <= 2,000 analyzed expression nodes") {
+    // Every later query of an import carries this plan (it is the cached
+    // batch), so a walk that re-embeds its tree per use is paid many
+    // times over; the Column-form MIME walk made it 5,360 nodes.
+    val plan = Normalize.emailsWithAttachments(Normalize.readRaw(spark, fixtureDir))
+      .queryExecution.analyzed
+    val nodes = plan.map(_.expressions.map(_.collect { case e => e }.size).sum).sum
+    assert(nodes <= 2000, s"analyzed plan has $nodes expression nodes")
+  }
+
   test("audit rows reference email ids") {
     val audit = Normalize.auditRows(emails, "imported")
     assert(audit.count() == 4)
