@@ -445,7 +445,7 @@ final class EmailEtlApi(
 
   /** `url screen` (beyond-reference surface; VERDICT r12 #6): the URL
     * family's front door for a USER-supplied batch — canonicalize each
-    * raw URL row-locally ([[graft.queries.WebQueries.withUrlParts]], the
+    * raw URL row-locally ([[graft.functions.UrlParts]], the
     * one rule set batch/streaming/oracle share), evaluate the RefinedWeb-
     * style gate features + verdict, and mark within-batch canonical
     * duplicates (keep-first by input position). Bounded driver boundary:
@@ -461,9 +461,12 @@ final class EmailEtlApi(
     import spark.implicits._
     val df = urls.zipWithIndex.map { case (u, i) => (i.toLong, u) }
       .toDF("url_id", "raw_url")
-    val staged = graft.queries.WebQueries.withUrlParts(df, col("raw_url"))
+    val parsed = df.withColumn("url",
+      graft.functions.UrlParts.urlParts(col("raw_url")))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("canon_url")
-    graft.queries.WebQueries.withGateFeatures(staged)
+    graft.queries.WebQueries.withGateFeatures(parsed)
+      .withColumn("canon_url", col("url.canon_url"))
+      .withColumn("host", col("url.host"))
       .withColumn("domain",
         graft.queries.WebQueries.domainOf(col("host")))
       .withColumn("n_dups", count(lit(1)).over(w))

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables => T}
+import graft.functions.UrlParts.urlParts
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,10 +21,12 @@ import org.apache.spark.sql.functions._
   * agree on every canon-relevant residue when both fall in the same
   * port/query classes), so `dedup_url` finds real groups at every SF.
   *
-  * Everything is built-in string/array functions (codegen'd, row-local):
-  * at 100 TB canonicalization is scan-bandwidth-bound, `dedup_url` is one
-  * hash-partitioned window on the canon key, and the domain prior is a
-  * bounded-cardinality aggregate broadcast back onto the corpus.
+  * The parse is one native expression, [[graft.functions.UrlParts]]
+  * (codegen'd, row-local, one plan node per use), and the rest is
+  * built-in functions: at 100 TB canonicalization is
+  * scan-bandwidth-bound, `dedup_url` is one hash-partitioned window on
+  * the canon key, and the domain prior is a bounded-cardinality aggregate
+  * broadcast back onto the corpus.
   */
 object WebQueries {
 
@@ -63,118 +66,23 @@ object WebQueries {
       when(m(8) === 0, "#frag").otherwise(""))
   }
 
-  // Canonicalization pieces, built on substring_index — a TOTAL plain
-  // string scan (no regex, no ANSI out-of-bounds throw on malformed
-  // records, so one bad URL can never kill a streaming drain). Each
-  // piece is parameterized by its IMMEDIATE input, never by the raw URL:
-  // the one-expression composition (`canonicalize`) re-embeds upstream
-  // trees multiplicatively (the raw synth appeared hundreds of times in
-  // the gate query's plan — janino paid seconds per codegen), so every
-  // corpus-sized path goes through [[withUrlParts]], which stages each
-  // piece ONCE as a named column (CollapseProject keeps multi-use
-  // non-cheap aliases materialized). "First occurrence" semantics
-  // throughout (substr-from-length arithmetic, never the -1
-  // last-occurrence form) so the DuckDB twins' string_split(...)[1]/[2]
-  // match on any input.
-  private def noFrag(raw: Column): Column = substring_index(raw, "#", 1)
-  /** Scheme-less input is treated as http. */
-  private def schemeFromU(u: Column): Column =
-    when(u.contains("://"), lower(substring_index(u, "://", 1)))
-      .otherwise("http")
-  private def restFromU(u: Column): Column =
-    when(u.contains("://"),
-      u.substr(length(substring_index(u, "://", 1)) + 4, length(u)))
-      .otherwise(u)
-  /** Authority ends at the first '/' OR '?' (fragments are already
-    * stripped): a path-less URL carrying a query (`http://h.com?x=1`)
-    * must not swallow the query into the host. The twin's c2 applies the
-    * same two-stage split. */
-  private def hostportFromRest(rest: Column): Column =
-    substring_index(substring_index(rest, "/", 1), "?", 1)
-  private def pathqFrom(rest: Column, hp: Column): Column =
-    rest.substr(length(hp) + 1, length(rest))
-  private def hostFromHp(hp: Column): Column = {
-    val h0 = lower(substring_index(hp, ":", 1))
-    when(h0.startsWith("www."), h0.substr(lit(5), length(h0))).otherwise(h0)
-  }
-  /** Port suffix with scheme-default ports (:80 http, :443 https)
-    * stripped; non-default ports survive. */
-  private def portFrom(scheme: Column, hp: Column): Column = {
-    val p0 = when(hp.contains(":"),
-      concat(lit(":"),
-        hp.substr(length(substring_index(hp, ":", 1)) + 2, length(hp))))
-      .otherwise("")
-    when(scheme === "http" && p0 === ":80", "")
-      .when(scheme === "https" && p0 === ":443", "")
-      .otherwise(p0)
-  }
-  /** Path with a trailing slash stripped (except the bare root). */
-  private def pathFromPathq(pathq: Column): Column = {
-    val p = substring_index(pathq, "?", 1)
-    when(p.endsWith("/") && length(p) > 1, p.substr(lit(1), length(p) - 1))
-      .otherwise(p)
-  }
-  /** Query string with utm_* tracking params dropped and the survivors
-    * sorted — parameter ORDER never distinguishes two URLs. Input is
-    * everything after the first '?' (substr past the end yields ''). */
-  private def sortedQueryFrom(pathq: Column): Column = {
-    val q = pathq.substr(
-      length(substring_index(pathq, "?", 1)) + 2, length(pathq))
-    array_join(
-      array_sort(filter(split(q, "&"),
-        p => !p.startsWith("utm_") && p =!= "")), "&")
-  }
-  private def canonFrom(scheme: Column, host: Column, port: Column,
-      pth: Column, qs: Column): Column =
-    concat(scheme, lit("://"), host, port, pth,
-      when(qs === "", "").otherwise(concat(lit("?"), qs)))
+  /** The canonical URL. Idempotent (spec-pinned). */
+  private[graft] def canonicalize(raw: Column): Column =
+    urlParts(raw).getField("canon_url")
 
-  /** Stages the URL parse ONCE per row as named columns `scheme`,
-    * `host`, `port`, `pth`, `qs`, `canon_url` (the DuckDB twin's c0–c6
-    * chain, engine-side). Every corpus-sized query and the streaming
-    * screen go through here — see the class note on expression-tree
-    * blowup for why composition into one Column is reserved for
-    * fixture-sized frames. */
-  private[graft] def withUrlParts(df: DataFrame, raw: Column): DataFrame =
-    df.withColumn("_u", noFrag(raw))
-      .withColumn("_scheme", schemeFromU(col("_u")))
-      .withColumn("_rest", restFromU(col("_u")))
-      .withColumn("_hp", hostportFromRest(col("_rest")))
-      .withColumn("_pathq", pathqFrom(col("_rest"), col("_hp")))
-      .withColumn("scheme", col("_scheme"))
-      .withColumn("host", hostFromHp(col("_hp")))
-      .withColumn("port", portFrom(col("_scheme"), col("_hp")))
-      .withColumn("pth", pathFromPathq(col("_pathq")))
-      .withColumn("qs", sortedQueryFrom(col("_pathq")))
-      .withColumn("canon_url", canonFrom(col("scheme"), col("host"),
-        col("port"), col("pth"), col("qs")))
-      .drop("_u", "_scheme", "_rest", "_hp", "_pathq")
-
-  /** The full canonical form as ONE Column — for fixture-sized frames
-    * (specs, point checks) only; corpus paths use [[withUrlParts]].
-    * Composed from the SAME piece functions, so the two forms cannot
-    * drift. Idempotent (spec-pinned). */
-  private[graft] def canonicalize(raw: Column): Column = {
-    val u = noFrag(raw)
-    val rest = restFromU(u)
-    val hp = hostportFromRest(rest)
-    val pathq = pathqFrom(rest, hp)
-    canonFrom(schemeFromU(u), hostFromHp(hp), portFrom(schemeFromU(u), hp),
-      pathFromPathq(pathq), sortedQueryFrom(pathq))
-  }
-
-  /** Canonical host from a raw URL (fixture-sized frames only). */
+  /** The canonical host. */
   private[graft] def hostOf(raw: Column): Column =
-    hostFromHp(hostportFromRest(restFromU(noFrag(raw))))
+    urlParts(raw).getField("host")
 
   /** Appends the RefinedWeb-style gate features + verdict (`path_depth`,
-    * `n_params`, `digit_frac`, `tracked`, `odd_port`, `pass`) to a
-    * [[withUrlParts]]-staged frame carrying `raw_url`. ONE rule set shared
-    * by the `url_quality_gate` registry row and the `url_screen` API verb
-    * — the two surfaces cannot drift. Row-local built-ins throughout. */
-  private[graft] def withGateFeatures(staged: DataFrame): DataFrame = {
-    val p = col("pth"); val qs = col("qs")
-    staged
+    * `n_params`, `digit_frac`, `tracked`, `odd_port`, `pass`) to a frame
+    * carrying `raw_url` and its [[graft.functions.UrlParts]] as `url`.
+    * ONE rule set shared by the `url_quality_gate` registry row and the
+    * `url_screen` API verb — the two surfaces cannot drift. Row-local
+    * built-ins throughout. */
+  private[graft] def withGateFeatures(parsed: DataFrame): DataFrame = {
+    val p = col("url.pth"); val qs = col("url.qs")
+    parsed
       .withColumn("path_depth", (size(split(p, "/")) - 1).cast("long"))
       .withColumn("n_params", when(qs === "", 0L)
         .otherwise(size(split(qs, "&")).cast("long")))
@@ -186,7 +94,7 @@ object WebQueries {
           (length(p) - length(regexp_replace(p, "[0-9]", ""))).cast("double")
             / length(p).cast("double")))
       .withColumn("tracked", col("raw_url").contains("utm_"))
-      .withColumn("odd_port", col("port") =!= "")
+      .withColumn("odd_port", col("url.port") =!= "")
       .withColumn("pass",
         !col("tracked") && col("n_params") <= 2 &&
           col("path_depth") <= 4 && col("digit_frac") <= 0.5)
@@ -231,8 +139,8 @@ object WebQueries {
       |    (CASE WHEN doc_id % 8 = 0 THEN '#frag' ELSE '' END) AS raw_url
       |  FROM documents)""".stripMargin
 
-  /** DuckDB twin of [[withUrlParts]] — the c0–c6 parse chain over ANY
-    * `raw` CTE carrying `raw_url` (extra columns pass through the
+  /** DuckDB twin of [[graft.functions.UrlParts]] — the c0–c6 parse chain
+    * over ANY `raw` CTE carrying `raw_url` (extra columns pass through the
     * `SELECT *`s). Ends in `c6(..., scheme, host, port, pth, qs)`. */
   private val CanonChainCtes: String =
     """c0 AS (SELECT *, string_split(raw_url, '#')[1] AS u FROM raw),
@@ -320,11 +228,11 @@ object WebQueries {
     "url_canonicalize" -> Q(
       "URL canonicalization: case, www, default ports, trailing slash, fragments, utm_* strip, param sort — row-local built-ins, scan-bandwidth-bound at 100 TB",
       (s, dir) => {
-        val staged = T.documents(s, dir)
+        T.documents(s, dir)
           .withColumn("raw_url", rawUrlCol(col("doc_id")))
-        withUrlParts(staged, col("raw_url"))
-          .select(col("doc_id"), col("raw_url"), col("canon_url"),
-            col("host"), domainOf(col("host")).as("domain"))
+          .withColumn("url", urlParts(col("raw_url")))
+          .select(col("doc_id"), col("raw_url"), col("url.canon_url"),
+            col("url.host"), domainOf(col("url.host")).as("domain"))
           .orderBy(col("doc_id"))
       },
       s"""WITH $CanonSqlCtes
@@ -335,8 +243,9 @@ object WebQueries {
       "URL-level dedup: group by canonical URL, keep-best by (n_chars DESC, doc_id ASC) — the cheapest dedup rung, one hash-partitioned window on the canon key",
       (s, dir) => {
         val w = Window.partitionBy("canon_url")
-        withUrlParts(T.documents(s, dir), rawUrlCol(col("doc_id")))
-          .select(col("doc_id"), col("n_chars"), col("canon_url"))
+        T.documents(s, dir)
+          .select(col("doc_id"), col("n_chars"),
+            canonicalize(rawUrlCol(col("doc_id"))).as("canon_url"))
           .withColumn("rn", row_number().over(
             w.orderBy(col("n_chars").desc, col("doc_id"))))
           .withColumn("n_dups", count(lit(1)).over(w))
@@ -361,15 +270,12 @@ object WebQueries {
     "web_domain_prior" -> Q(
       "CCNet-style domain prior: per registered domain doc count / host count / mean length, broadcast-joined back onto each page — the quality prior join",
       (s, dir) => {
-        val canon = withUrlParts(T.documents(s, dir),
-          rawUrlCol(col("doc_id")))
-          .select(col("doc_id"), col("n_chars"), col("host"))
+        val canon = T.documents(s, dir)
+          .select(col("doc_id"), col("n_chars"),
+            hostOf(rawUrlCol(col("doc_id"))).as("host"))
           .withColumn("domain", domainOf(col("host")))
           // consumed by the prior build AND the page stream: persisting
-          // the 4-column frame runs the parse chain once, and cache
-          // substitution keeps the optimizer from re-walking the staged
-          // canonicalization tree per branch (measured 1.2 s of the
-          // query's 1.8 s wall was driver-side planning, jobsum 0.56 s)
+          // the 4-column frame parses each URL once
           .persist()
         val prior = canon.groupBy("domain").agg(
           count(lit(1)).as("domain_docs"),
@@ -400,10 +306,9 @@ object WebQueries {
     "url_quality_gate" -> Q(
       "RefinedWeb-style URL quality gate: path depth, param count, path digit density, tracking/odd-port flags and the pass verdict — the URL-feature filter a crawl pipeline runs before fetching content",
       (s, dir) => {
-        val staged = withUrlParts(
-          T.documents(s, dir).withColumn("raw_url", rawUrlCol(col("doc_id"))),
-          col("raw_url"))
-        withGateFeatures(staged)
+        withGateFeatures(T.documents(s, dir)
+            .withColumn("raw_url", rawUrlCol(col("doc_id")))
+            .withColumn("url", urlParts(col("raw_url"))))
           .select(col("doc_id"), col("path_depth"), col("n_params"),
             col("digit_frac"), col("tracked"), col("odd_port"), col("pass"))
           .orderBy(col("doc_id"))
@@ -429,12 +334,11 @@ object WebQueries {
       "URL canonicalization + gate totality fence over shapes the synthetic corpus never emits — scheme-less, single-label host, empty path (the 0/0 digit_frac guard), query-without-path, port-carrying, root-slash URLs — the fixture is stated literally on BOTH sides so the totality guards are hash-fenced, not just code-reviewed (r13 verdict task #7)",
       (s, _) => {
         import s.implicits._
-        withGateFeatures(
-          withUrlParts(AdversarialUrls.toDF("doc_id", "raw_url"),
-            col("raw_url")))
-          .select(col("doc_id"), col("canon_url"), col("host"), col("port"),
-            col("path_depth"), col("n_params"), col("digit_frac"),
-            col("tracked"), col("odd_port"), col("pass"))
+        withGateFeatures(AdversarialUrls.toDF("doc_id", "raw_url")
+            .withColumn("url", urlParts(col("raw_url"))))
+          .select(col("doc_id"), col("url.canon_url"), col("url.host"),
+            col("url.port"), col("path_depth"), col("n_params"),
+            col("digit_frac"), col("tracked"), col("odd_port"), col("pass"))
           .orderBy(col("doc_id"))
       },
       s"""WITH raw AS (

@@ -19,7 +19,7 @@ import org.apache.spark.sql.types._
   *
   * Completes the batch (`url_canonicalize`) → batch-dedup (`dedup_url`)
   * → streaming ladder, mirroring [[StreamingSpanScreen]]'s shape:
-  *  1. canonicalize — the SHARED [[WebQueries.canonicalize]] column
+  *  1. canonicalize — the SHARED [[WebQueries.canonicalize]] parse
   *     (one rule set for batch, streaming, and the DuckDB twin);
   *  2. within-batch keep-best by (n_chars DESC, doc_id ASC) per canon
   *     key — one window over the micro-batch (batch-sized, cheap);
@@ -82,11 +82,8 @@ object StreamingUrlScreen {
     * Exposed for the spec; `drain` wires it into foreachBatch. */
   private[streaming] def screenAgainstStore(
       batch: DataFrame, urlStore: Option[DataFrame]): DataFrame = {
-    // staged parse (withUrlParts), not the one-Column composition — the
-    // per-batch plan/codegen cost of the blown-up single expression
-    // would dominate micro-batch latency
-    val canon = WebQueries.withUrlParts(batch, col("url"))
-      .select(col("doc_id"), col("n_chars"), col("canon_url"))
+    val canon = batch.select(col("doc_id"), col("n_chars"),
+      WebQueries.canonicalize(col("url")).as("canon_url"))
     val w = Window.partitionBy("canon_url")
       .orderBy(col("n_chars").desc, col("doc_id"))
     val bestInBatch = canon

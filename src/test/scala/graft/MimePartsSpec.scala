@@ -84,15 +84,6 @@ class MimePartsSpec extends SparkSpec {
     dir
   }
 
-  private def withConf[T](kv: (String, String)*)(f: => T): T = {
-    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally before.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** Each message's parts by id: the native walk, projected on its own so
     * it is planned the way the settings ask, and the reference. */
   private def bothWalks(): (Map[String, Seq[Row]], Map[String, Seq[Row]], Boolean) = {

@@ -19,6 +19,17 @@ trait SparkSpec extends AnyFunSuite {
       .getOrCreate()
   }
 
+  /** Runs `f` with the given session settings, restoring the old values
+    * (or their absence) after it. */
+  def withConf[T](kv: (String, String)*)(f: => T): T = {
+    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 

@@ -163,8 +163,9 @@ class StreamingUrlScreenSpec extends SparkSpec {
       val union = perm.zipWithIndex.flatMap { case (shard, i) =>
         shards(shard).map { case (id, u, n) => (id, u, n, i) }
       }.toDF("doc_id", "url", "n_chars", "batch_idx")
-      val expected = graft.queries.WebQueries
-        .withUrlParts(union, col("url"))
+      val expected = union
+        .withColumn("canon_url",
+          graft.queries.WebQueries.canonicalize(col("url")))
         .withColumn("rn", row_number().over(
           Window.partitionBy("canon_url").orderBy(
             col("batch_idx"), col("n_chars").desc, col("doc_id"))))
