@@ -74,12 +74,9 @@ object Bench {
         // inflation (r6: q1_agg 1.9x, text_lm_quality 2.4x vs isolated
         // with gc_sec ~ 0 — shared-JVM scheduler/cache contention, not a
         // plan property). The sleep is untimed; it costs bench wall-clock,
-        // never a query's reported seconds. SPARK_GRAFT_BENCH_SETTLE=0
-        // disables (dev A/B only; the driver never sets it).
-        if (sys.env.getOrElse("SPARK_GRAFT_BENCH_SETTLE", "1") != "0") {
-          System.gc()
-          Thread.sleep(30)
-        }
+        // never a query's reported seconds.
+        System.gc()
+        Thread.sleep(30)
         val t0 = System.nanoTime()
         val g0 = gcMillis
         try { materialize(fn(spark, sfDir))
@@ -204,10 +201,8 @@ object Bench {
           .filter(_ >= 0)
       } catch { case _: Throwable => None }
     }
-    val adjudicate = only.isEmpty &&
-      sys.env.getOrElse("SPARK_GRAFT_ADJUDICATE", "1") != "0"
     val adjudicated: Seq[(String, Double, Option[Double])] =
-      if (!adjudicate) Seq.empty
+      if (only.nonEmpty) Seq.empty
       else breachers.map { case (name, t) => (name, t, isolatedRun(name)) }
     val adjJson = adjudicated.map { case (name, t, iso) =>
       val isoStr = iso.map(v => f"$v%.2f").getOrElse("null")

@@ -5,6 +5,7 @@ import graft.ingest.Normalize
 import graft.model.Schemas
 import graft.search.{EmailSearch, SearchFilters}
 import graft.sinks.MarkdownSink
+import graft.store.TableSwap
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -97,6 +98,7 @@ final class EmailEtlApi(
       maxResults: Option[Int] = None,
       startDate: Option[java.sql.Timestamp] = None,
       generateEmbeddings: Boolean = true): Map[String, Long] = {
+    recoverSwaps()
     // failed = raw lines the normalizer cannot attribute to a message
     // (corrupt or cut-off JSON parses with a null id; reference counts
     // these in stats['failed'], etl_pipeline.py:100-103)
@@ -198,6 +200,7 @@ final class EmailEtlApi(
     * a full import, exactly like the reference. */
   def syncIncremental(inboxDir: String,
       generateEmbeddings: Boolean = true): Map[String, Long] = {
+    recoverSwaps()
     val latest: Option[java.sql.Timestamp] =
       if (tableExists("emails"))
         Option(emails.agg(max(col("date"))).collect()(0).getTimestamp(0))
@@ -208,6 +211,7 @@ final class EmailEtlApi(
 
   /** Embedding pass: B4 backlog → H1 batched embed → A9 column upsert. */
   def embedBacklog(): Long = {
+    recoverSwaps()
     val page = backlogPage(emails)
     val n = page.count()
     if (n > 0) replaceTable("emails", withEmbedded(emails, page))
@@ -236,16 +240,13 @@ final class EmailEtlApi(
       }.toSeq: _*)
   }
 
-  /** Stage-and-swap of one store table: write `df` beside the table, then
-    * replace the table with it. `df` may read the table it replaces. */
-  private def replaceTable(name: String, df: DataFrame): Unit = {
-    val live = new org.apache.hadoop.fs.Path(s"$storeDir/$name")
-    val staging = new org.apache.hadoop.fs.Path(s"$storeDir/${name}__staging")
-    df.write.mode("overwrite").parquet(staging.toString)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(live, true)
-    fs.rename(staging, live)
-  }
+  private def replaceTable(name: String, df: DataFrame): Unit =
+    TableSwap.replace(df, s"$storeDir/$name")
+
+  /** Finishes the swap of a table that a crash cut between its delete and
+    * its rename, so a writer never mistakes that table for a missing one. */
+  private def recoverSwaps(): Unit =
+    Seq("emails", "attachments").foreach(t => TableSwap.recover(spark, s"$storeDir/$t"))
 
   /** `search semantic` (reference: main.py:239-269; limit 10 ∈ [1,100]).
     * `columns` are the hits' columns ([[EmailSearch.hybridSearch]]). */

@@ -658,8 +658,8 @@ object SelectionQueries {
         // this job fills the bySrc cache, so the srcTot/allB broadcast
         // builds and the report stream all read the 256×n_sources cache
         // warm instead of racing the cold token explode+agg concurrently
-        // (ProbeSweep ratio 1.18 with the crossJoin form); it also drops
-        // one broadcast exchange. Identical arithmetic: gt enters the
+        // (tools/Probe job_ms/wall 1.18 with the crossJoin form); it also
+        // drops one broadcast exchange. Identical arithmetic: gt enters the
         // division as the same long literal.
         val gt = bySrc.agg(sum(col("c"))).head.getLong(0)
         def orderedSum(v: Column) = aggregate(

@@ -474,7 +474,7 @@ object TextOpsQueries {
         // of the query: reading it through `staged` fills the signature
         // cache before the band join's two sides (and the verify's two
         // tset joins) can race it cold and duplicate the tokenize+minhash
-        // subtree concurrently (ProbeSweep measured job-time/wall = 1.51
+        // subtree concurrently (tools/Probe measured job_ms/wall = 1.51
         // with the max taken from the raw parquet scan; the same
         // guide-§1.2 dedup as the select_dsir persist, but with zero
         // extra jobs — the cursor job was already being paid).

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.ingest.Normalize
 import graft.model.Schemas
 import graft.operators.Upsert
+import graft.store.TableSwap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -57,33 +58,21 @@ object IncrementalSync {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val storePath = new org.apache.hadoop.fs.Path(storeDir)
-        val staging = new org.apache.hadoop.fs.Path(storeDir + "__staging")
-        val fs = storePath.getFileSystem(
-          batch.sparkSession.sessionState.newHadoopConf())
-        // Crash recovery: a previous batch may have died between
-        // delete(store) and rename(staging, store). Staging then holds
-        // that batch's COMPLETE merged result (prior store + batch), so
-        // promote it before proceeding; the checkpoint replays the batch
-        // and the merge is idempotent. Without this, replay with a
-        // missing store would rebuild it from the batch alone, silently
-        // dropping everything previously synced.
-        if (!fs.exists(storePath) && fs.exists(staging)) fs.rename(staging, storePath)
-        // In-batch duplicate message_ids are resolved by mergeByKey's
+        // A batch that died between its swap's delete and rename left its
+        // complete merged result (prior store + batch) in staging: recover
+        // promotes it, and the checkpoint replays that batch into it (the
+        // merge is idempotent). In-batch duplicate message_ids are resolved by mergeByKey's
         // total last-writer-wins order — a pre-dropDuplicates here would
         // pick an arbitrary row instead.
         val merged =
-          if (fs.exists(storePath)) {
+          if (TableSwap.recover(batch.sparkSession, storeDir)) {
             // declared schema: inferring it would cost a job per batch
             val existing = batch.sparkSession.read.schema(Schemas.emailSchema).parquet(storeDir)
             Upsert.mergeByKey(existing, batch, "message_id", "updated_at")
           } else Upsert.mergeByKey(batch.limit(0), batch, "message_id", "updated_at")
-        // Stage-and-swap: never overwrite the directory being read mid-plan,
-        // and stay fully distributed (no driver materialization).
-        merged.write.mode("overwrite").parquet(staging.toString)
-        fs.delete(storePath, true)
-        fs.rename(staging, storePath)
-        ()
+        // never overwrite the directory being read mid-plan, and stay
+        // fully distributed (no driver materialization)
+        TableSwap.replace(merged, storeDir)
       }
       .start()
     q.awaitTermination()

@@ -28,8 +28,8 @@ object PackStreamScale {
     import spark.implicits._
 
     val landing = s"$work/landing"
-    val nShards = StreamScale.writeShards(
-      spark, docsParquet, landing, shardRows = 2500, maxDocs = 50000L)
+    val nShards = StreamScale.writeShards(spark, docsParquet,
+      Seq(col("doc_id"), col("text")), landing, shardRows = 2500, maxDocs = 50000L)
 
     val rec = new StreamScale.Recorder
     spark.streams.addListener(rec)

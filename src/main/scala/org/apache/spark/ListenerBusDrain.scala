@@ -1,7 +1,7 @@
 package org.apache.spark
 
-/** Lets a spec wait until every posted listener event has been delivered
-  * before it reads what its own listener counted. `waitUntilEmpty` is
+/** Waits until every posted listener event has been delivered, so a
+  * caller can read what its own listener counted. `waitUntilEmpty` is
   * `private[spark]`, hence this package. */
 object ListenerBusDrain {
   def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()

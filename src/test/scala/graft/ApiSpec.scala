@@ -159,6 +159,36 @@ class ApiSpec extends SparkSpec {
     assert(missing.forall(r => !r.getBoolean(1) && !r.getBoolean(2)))
   }
 
+  test("sync after a swap cut between delete and rename keeps every prior row") {
+    import ImportFixture._
+    val store = tmpDir("api-swap-store")
+    val day1 = tmpDir("api-swap-day1")
+    val day2 = tmpDir("api-swap-day2")
+    write(day1, "day1.json", Seq(
+      msg("w1", "Fri, 01 Mar 2024 10:00:00 +0000", "budget", plain = Some("review the budget"),
+        atts = Seq(Att("plan.png", safe = true), Att("run.exe", safe = false))),
+      msg("w2", "Sat, 02 Mar 2024 10:00:00 +0000", "launch", plain = Some("launch is on track"),
+        atts = Seq(Att("scan.png", safe = true)))))
+    write(day2, "day2.json", Seq(
+      msg("w3", "Sun, 03 Mar 2024 10:00:00 +0000", "invoice", plain = Some("payment due"),
+        atts = Seq(Att("invoice.png", safe = true)))))
+    val a = new EmailEtlApi(spark, store)
+    a.importFull(day1)
+    val tables = Seq("emails", "attachments")
+    def rows(t: String): Set[String] = spark.read.parquet(s"$store/$t").toJSON.collect().toSet
+    val before = tables.map(rows)
+    assert(before.map(_.size) == Seq(2, 3))
+    // a crash after each swap deleted its live table, before the rename
+    val fs = new org.apache.hadoop.fs.Path(store).getFileSystem(spark.sessionState.newHadoopConf())
+    tables.foreach(t => assert(fs.rename(new org.apache.hadoop.fs.Path(s"$store/$t"),
+      new org.apache.hadoop.fs.Path(s"$store/${t}__staging"))))
+    a.syncIncremental(day2)
+    val after = tables.map(rows)
+    tables.indices.foreach(i => assert(before(i).subsetOf(after(i)), s"${tables(i)} lost rows"))
+    assert(after.map(_.size) == Seq(3, 4))
+    assert(tables.forall(t => !fs.exists(new org.apache.hadoop.fs.Path(s"$store/${t}__staging"))))
+  }
+
   test("url screen: canonicalization, gate verdicts, within-batch keep-first dedup, bounds") {
     val rows = api.urlScreen(Seq(
       "http://www.Ex.org:80/a/?utm_s=1&x=1#f", // canon dup of the next, tracked

@@ -29,6 +29,12 @@ class RegistryDeterminismSpec extends SparkSpec {
     "c_nationkey", "label", "l_linenumber", "n_nationkey", "n_regionkey",
     "p_size", "r_regionkey", "s_nationkey", "embedding")
 
+  /** Bound on the expression nodes of any registry query's optimized
+    * plan, about twice the largest at smoke scale (text_lang_id, 751): a
+    * builder whose tree grows with nesting fails here instead of
+    * exhausting the heap. */
+  private val MaxPlanNodes = 1500
+
   private def portable(name: String, dt: DataType): Boolean = dt match {
     case LongType | DoubleType | StringType | BooleanType |
          TimestampType | TimestampNTZType | DateType | BinaryType => true
@@ -51,6 +57,8 @@ class RegistryDeterminismSpec extends SparkSpec {
             " — widen computed ints to long / floats to double, cast final decimals to double")
       }
       val a = df.collect().toSeq
+      val nodes = exprNodes(df.queryExecution.optimizedPlan)
+      assert(nodes < MaxPlanNodes, s"optimized plan has $nodes expression nodes")
       spark.catalog.clearCache()
       val b = q.fn(spark, sf).collect().toSeq
       assert(a.size == b.size, s"row count changed: ${a.size} vs ${b.size}")

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM — getOrCreate reuses).
@@ -29,6 +30,11 @@ trait SparkSpec extends AnyFunSuite {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** Expression nodes over every operator of `plan`: the size the
+    * plan-size guards bound. */
+  def exprNodes(plan: LogicalPlan): Int =
+    plan.map(_.expressions.map(_.collect { case e => e }.size).sum).sum
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString

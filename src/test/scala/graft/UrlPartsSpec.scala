@@ -182,8 +182,7 @@ class UrlPartsSpec extends SparkSpec {
     // the tree per application, and analysis of a nested use runs out of
     // heap; one that adds a constant keeps any nesting bounded
     val df = Seq(("x", 1L)).toDF("raw", "doc_id")
-    def nodes(c: Column): Int = df.select(c.as("c")).queryExecution.analyzed
-      .map(_.expressions.map(_.collect { case e => e }.size).sum).sum
+    def nodes(c: Column): Int = exprNodes(df.select(c.as("c")).queryExecution.analyzed)
     def growth(x: Column): Int = nodes(WebQueries.canonicalize(x)) - nodes(x)
     val bare = growth(col("raw"))
     assert(growth(WebQueries.rawUrlCol(col("doc_id"))) == bare)
