@@ -84,14 +84,16 @@ final class EmailEtlApi(
     * analyzed and cached, and again in the plan info and explain strings
     * of each of those queries. `NormalizeSpec` bounds that size.
     *
-    * Spark compiles each query's generated classes into one JVM-wide LRU
+    * Spark compiles each query's generated classes into one JVM-wide
     * cache, 100 classes unless the session sets
     * `spark.sql.codegen.cache.maxEntries`. A sync is a handful of
-    * queries, each planned the same way every time, so the classes one
-    * sync needs fit that cache with room to spare and the next sync finds
-    * them there: only the stage that holds the start-date literal is
-    * compiled again. A sync that needed more than the cache holds would
-    * evict its own classes and recompile every one of them, every time;
+    * queries, each planned the same way every time, and needs 74 classes;
+    * the next sync finds them there and compiles none. The cache is four
+    * LRU segments of 25, though, and a class's segment follows a hash
+    * that includes its class loader's identity, so it differs from JVM to
+    * JVM. In a JVM where more than 25 of the sync's classes share a
+    * segment, that segment evicts its own classes and every sync
+    * recompiles them (23 to 32 compilations where none would do);
     * `SyncCodegenSpec` guards the bound. Keep a new step inside a query
     * that already runs rather than adding one. */
   def importFull(inboxDir: String,
@@ -106,7 +108,13 @@ final class EmailEtlApi(
     val raw = Normalize.readRaw(spark, inboxDir)
       .observe(parsed, sum(col("id").isNull.cast("long")).as("failed"))
     val normalized = Normalize.emailsWithAttachments(raw)
-    val lines = startDate.map(d => normalized.filter(col("date") >= lit(d)))
+    // An undated line cannot be compared with the start date: it passes,
+    // and the driver drops its message below if the store holds it. The
+    // date is compared inside a struct because Spark writes a timestamp
+    // constant into the generated class, and each sync would compile the
+    // batch's largest class anew; a struct constant is passed by reference.
+    val lines = startDate
+      .map(d => normalized.filter(struct(col("date")) >= struct(lit(d)) || col("date").isNull))
       .getOrElse(normalized)
       .withColumn("__line", monotonically_increasing_id())
       .persist()
@@ -122,15 +130,24 @@ final class EmailEtlApi(
         .collect().map(r => BatchLine(r.getString(0), r.getLong(1),
           Option(r.getTimestamp(2)), Option(r.getTimestamp(3)), r.getInt(4), r.getInt(5)))
       val messages = all.groupBy(_.messageId).values.map(_.minBy(_.line)).toSeq
-      val chosen = maxResults.fold(messages)(n =>
-        messages.sorted(BatchLine.newestFirst).take(math.max(0, n)))
-      val keys = chosen.map(_.messageId)
+      def newest(ms: Seq[BatchLine]): Seq[BatchLine] =
+        maxResults.fold(ms)(n => ms.sorted(BatchLine.newestFirst).take(math.max(0, n)))
+      // A start date drops an undated message the store already holds: a
+      // sync takes it once and never re-reads it, like the reference's
+      // `after:`, which filters on the provider's own receipt date. Its
+      // key joins the store lookup the merge runs anyway.
+      val undated = if (startDate.isEmpty) Nil else messages.filter(_.date.isEmpty).map(_.messageId)
       val storeExists = tableExists("emails")
-      val stored: Map[String, Option[java.sql.Timestamp]] =
-        if (!storeExists || keys.isEmpty) Map.empty
-        else emails.filter(col("message_id").isin(keys: _*))
+      val stored: Map[String, Option[java.sql.Timestamp]] = {
+        val asked = (newest(messages).map(_.messageId) ++ undated).distinct
+        if (!storeExists || asked.isEmpty) Map.empty
+        else emails.filter(col("message_id").isin(asked: _*))
           .select("message_id", "updated_at").collect()
           .map(r => r.getString(0) -> Option(r.getTimestamp(1))).toMap
+      }
+      val resident = undated.filter(stored.contains).toSet
+      val chosen = newest(messages.filterNot(m => resident(m.messageId)))
+      val keys = chosen.map(_.messageId)
       // A4, in Upsert.mergeByKey's order: the greater `updated_at` wins,
       // null ranks last, and the incoming row wins a tie
       val lost = chosen.filter(m => stored.get(m.messageId).flatten
@@ -196,8 +213,11 @@ final class EmailEtlApi(
   /** Incremental sync (reference: src/etl_pipeline.py:233-245): import
     * everything dated at or after the store's latest email — the `>=`
     * is the reference's "small buffer to avoid missing emails"; boundary
-    * re-reads dedup into `skipped`. Empty or missing store falls back to
-    * a full import, exactly like the reference. */
+    * re-reads dedup into `skipped`. An undated message is taken by the
+    * first sync that finds it and by no later one ([[importFull]]'s
+    * start-date rule). Empty or missing store falls back to a full
+    * import, exactly like the reference. The one sync of every entry
+    * point: CLI `import sync`, REST `/api/emails/sync`, MCP `sync_emails`. */
   def syncIncremental(inboxDir: String,
       generateEmbeddings: Boolean = true): Map[String, Long] = {
     recoverSwaps()
@@ -547,11 +567,9 @@ object Cli {
 
   private[graft] def run(spark: SparkSession, args: List[String]): Unit = args match {
     case "import" :: "full" :: inbox :: store :: Nil =>
-      val stats = new EmailEtlApi(spark, store).importFull(inbox)
-      println(stats.map { case (k, v) => s"$k=$v" }.mkString(" "))
-    case "import" :: "sync" :: inbox :: store :: ckpt :: Nil =>
-      graft.streaming.IncrementalSync.streamSync(spark, inbox, s"$store/emails", ckpt)
-      println("sync complete")
+      printStats(new EmailEtlApi(spark, store).importFull(inbox))
+    case "import" :: "sync" :: inbox :: store :: Nil =>
+      printStats(new EmailEtlApi(spark, store).syncIncremental(inbox))
     case "search" :: "semantic" :: store :: query :: rest =>
       val k = rest.headOption.map(_.toInt).getOrElse(10)
       new EmailEtlApi(spark, store).searchSemantic(query, k).show(k, truncate = false)
@@ -592,7 +610,7 @@ object Cli {
         s"""unknown command: ${other.mkString(" ")}
            |usage:
            |  import full <inboxDir> <storeDir>
-           |  import sync <inboxDir> <storeDir> <checkpointDir>
+           |  import sync <inboxDir> <storeDir>
            |  search semantic <storeDir> <query> [k]
            |  search ask <storeDir> <question>
            |  analyze categorize <storeDir> [limit]
@@ -605,4 +623,7 @@ object Cli {
            |  url screen <storeDir> <url> [url ...]
            |  tokenizer audit <storeDir> <text> [text ...]""".stripMargin)
   }
+
+  private def printStats(stats: Map[String, Long]): Unit =
+    println(stats.map { case (k, v) => s"$k=$v" }.mkString(" "))
 }

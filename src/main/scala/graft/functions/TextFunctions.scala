@@ -28,16 +28,8 @@ object TextFunctions {
   /** Whitespace tokenization of already-clean text. */
   def tokens(text: Column): Column = split(text, " ")
 
-  /** Lowercased word tokenization for arbitrary text (splits on any
-    * non-alphanumeric run, drops empties). */
-  def wordTokens(text: Column): Column =
-    filter(split(lower(text), "[^a-z0-9]+"), t => length(t) > 0)
-
   /** Token count as long. */
   def tokenCount(text: Column): Column = size(tokens(text)).cast("long")
-
-  /** Distinct tokens, sorted — the "token set" used by Jaccard. */
-  def tokenSet(text: Column): Column = array_sort(array_distinct(tokens(text)))
 
   /** k-token shingles: ["a","b","c","d"], k=3 → ["a b c","b c d"].
     * Docs shorter than k shingle to the whole document. */

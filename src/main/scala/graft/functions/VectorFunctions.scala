@@ -139,10 +139,4 @@ object VectorFunctions {
     val bd = b.cast(ArrayType(DoubleType))
     aggregate(zip_with(ad, bd, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
   }
-
-  /** L2 norm of a vector column (double fold). */
-  def l2Norm(a: Column): Column = {
-    val ad = a.cast(ArrayType(DoubleType))
-    sqrt(aggregate(ad, lit(0.0), (acc, v) => acc + v * v))
-  }
 }

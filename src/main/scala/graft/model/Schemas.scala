@@ -22,8 +22,7 @@ object Schemas {
   /** Default similarity threshold (reference: src/embeddings.py:172). */
   val SimilarityThreshold = 0.7
 
-  /** Batch sizes (reference: src/config.py:57-58, src/etl_pipeline.py:217). */
-  val ImportBatchSize = 50
+  /** Batch sizes (reference: src/etl_pipeline.py:217). */
   val EmbeddingBatchSize = 100
   val EmbeddingBacklogPage = 1000
 

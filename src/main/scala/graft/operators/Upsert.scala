@@ -1,13 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** A4/A9/A10 — the reference's `INSERT ... ON CONFLICT DO UPDATE` family,
-  * reproduced as deterministic set-level merges (SURVEY §4: no
-  * transactional store, so upsert = dedup-window overwrite with
-  * last-writer-wins).
+/** A4 — the reference's `INSERT ... ON CONFLICT DO UPDATE`, reproduced as
+  * a deterministic set-level merge (SURVEY §4: no transactional store, so
+  * upsert = dedup-window overwrite with last-writer-wins).
+  * `EmailEtlApi.importFull` applies the same order on the driver, from the
+  * batch's keys and the store's versions of them, so its merge does not
+  * shuffle the store; this form merges two frames of any size.
   *
   * Scale notes: the merge shuffles once on the natural key; at 100 TB the
   * emails table would be bucketed by `message_id` so both the existing
@@ -44,45 +46,4 @@ object Upsert {
       .filter(col("__rn") === 1)
       .drop("__rn", "__src")
   }
-
-  /** A9: column-level upsert — overwrite `valueCol` for keys present in
-    * `updates`, keep the old value elsewhere (reference:
-    * src/database.py:150-166 UPDATE emails SET embedding=... WHERE id=...).
-    *
-    * UPDATE semantics require the row count of `target` to be preserved,
-    * so duplicate keys in `updates` (e.g. a backlog processed twice into
-    * one frame) are resolved BEFORE the join — deterministically, by the
-    * greatest value (`valueCol` must be an orderable type; arrays are). */
-  def updateColumn(
-      target: DataFrame,
-      updates: DataFrame,
-      key: String,
-      valueCol: String): DataFrame = {
-    val newCol = s"__new_$valueCol"
-    val u = updates.groupBy(col(key)).agg(max(col(valueCol)).as(newCol))
-    target.join(u, Seq(key), "left")
-      .withColumn(valueCol, coalesce(col(newCol), col(valueCol)))
-      .drop(newCol)
-  }
-
-  /** A10: key/value config upsert on a composite key (reference:
-    * src/database.py:345-402). */
-  def upsertKv(
-      existing: DataFrame,
-      incoming: DataFrame,
-      keys: Seq[String],
-      version: String): DataFrame = {
-    val tagged = existing.withColumn("__src", lit(0))
-      .unionByName(incoming.withColumn("__src", lit(1)), allowMissingColumns = true)
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col(version).desc_nulls_last, col("__src").desc)
-    tagged.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn", "__src")
-  }
-
-  /** F25: config rows → driver-side Map (reference: src/database.py:360-372). */
-  def kvToMap(config: DataFrame, keyCol: String, valueCol: String): Map[String, String] =
-    config.select(col(keyCol), col(valueCol)).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
 }

@@ -468,7 +468,7 @@ object TextOpsQueries {
         // increment never re-shingles or re-pairs the 100 TB base — the
         // one-sided band join is what makes monthly-crawl dedup feasible.
         // The 1-row max() fetch is a driver-side scalar boundary (same
-        // pattern as the sync cursor in IncrementalSync). It is computed
+        // pattern as the sync cursor in EmailEtlApi.syncIncremental). It is computed
         // off the persisted `staged` frame — 1:1 with documents, so the
         // max is identical — because this scalar job is the FIRST action
         // of the query: reading it through `staged` fills the signature

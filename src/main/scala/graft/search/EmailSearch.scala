@@ -108,17 +108,6 @@ class EmailSearch(emails: DataFrame) {
       .orderBy(col("email_count").desc, col("key"))
   }
 
-  /** C8: thread summary stats (reference: src/llm_integration.py:164-172). */
-  def threadStats(threadId: String): DataFrame =
-    emails.filter(col("thread_id") === threadId)
-      .groupBy(col("thread_id"))
-      .agg(
-        count(lit(1)).as("email_count"),
-        min(col("date")).as("first_date"),
-        max(col("date")).as("last_date"),
-        // collect_set order is partitioning-dependent; sort for a stable row
-        array_sort(collect_set(col("sender"))).as("participants"))
-
   // ------------------------------------------------------------------ D search
 
   /** D1: exact k-NN over non-null embeddings (reference: database.py:168-184).

@@ -32,9 +32,8 @@ import scala.jdk.CollectionConverters._
   * Scope (mirrors the environment contract): batch files only — the live
   * paginated Gmail API source is environment-excluded (no OAuth); its
   * pagination becomes the file boundary here, exactly as
-  * `ingest.Normalize.readRaw` assumes. Streaming reads go through the
-  * file-stream source (`streaming.IncrementalSync`), which already
-  * handles checkpoints; this provider is the batch scan.
+  * `ingest.Normalize.readRaw` assumes. This provider is a batch scan
+  * only; it has no streaming read.
   *
   * Reference: message listing + fetch
   * `src/providers/gmail/provider.py:89-164`; the canonical nested

@@ -11,9 +11,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * A crash between the delete and the rename leaves no live table and a
   * complete staging directory that holds the table as the swap wrote it.
-  * [[recover]] finishes that swap; a writer runs it before it looks at a
-  * table, or it would find no table and write its batch alone over the
-  * staged one. A reader in the middle of a swap still finds no table. */
+  * [[recover]] finishes that swap; the API's import, sync and embedding
+  * pass run it before they look at a table, or they would find no table
+  * and write their batch alone over the staged one. A reader in the middle of a swap still finds no table. */
 object TableSwap {
 
   /** Replaces the table at `table` with `df`. */
@@ -24,15 +24,13 @@ object TableSwap {
     fs.rename(staging, live)
   }
 
-  /** Promotes a complete staging directory whose live table is missing,
-    * and returns whether the table exists now. Staging is complete once
-    * its write committed (`_SUCCESS`); a staging directory beside a live
-    * table, or without `_SUCCESS`, is a swap that died while writing, and
-    * the next [[replace]] overwrites it. */
-  def recover(spark: SparkSession, table: String): Boolean = {
+  /** Promotes a complete staging directory whose live table is missing.
+    * Staging is complete once its write committed (`_SUCCESS`); a staging
+    * directory beside a live table, or without `_SUCCESS`, is a swap that
+    * died while writing, and the next [[replace]] overwrites it. */
+  def recover(spark: SparkSession, table: String): Unit = {
     val (fs, live, staging) = paths(spark, table)
-    fs.exists(live) ||
-      (fs.exists(new Path(staging, "_SUCCESS")) && fs.rename(staging, live))
+    if (!fs.exists(live) && fs.exists(new Path(staging, "_SUCCESS"))) fs.rename(staging, live)
   }
 
   private def paths(spark: SparkSession, table: String): (FileSystem, Path, Path) = {

@@ -189,6 +189,37 @@ class ApiSpec extends SparkSpec {
     assert(tables.forall(t => !fs.exists(new org.apache.hadoop.fs.Path(s"$store/${t}__staging"))))
   }
 
+  test("sync takes a late undated message once and never re-reads it") {
+    import ImportFixture._
+    val inbox = tmpDir("api-undated-inbox")
+    val a = new EmailEtlApi(spark, tmpDir("api-undated-store"))
+    write(inbox, "day1.json", Seq(msg("d1", "Fri, 01 Mar 2024 10:00:00 +0000", "one", plain = Some("first"))))
+    a.importFull(inbox)
+    write(inbox, "day2.json", Seq(
+      msg("d2", "Sat, 02 Mar 2024 10:00:00 +0000", "two", plain = Some("second")),
+      msg("u1", "sometime last week", "undated", plain = Some("no usable date"))))
+    val first = a.syncIncremental(inbox)
+    assert(a.emails.select("message_id").collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("d1", "d2", "u1"))
+    assert((first("total_found"), first("processed"), first("skipped")) == ((3L, 2L, 1L)), s"$first")
+    // the next sync re-reads only the boundary message d2
+    val second = a.syncIncremental(inbox)
+    assert((second("total_found"), second("processed"), second("skipped")) == ((1L, 0L, 1L)), s"$second")
+  }
+
+  test("CLI import sync writes every table and embeds, as the API sync does") {
+    import ImportFixture._
+    val inbox = tmpDir("api-cli-sync-inbox")
+    val store = tmpDir("api-cli-sync-store")
+    write(inbox, "day1.json", Seq(msg("p1", "Fri, 01 Mar 2024 10:00:00 +0000", "scan",
+      plain = Some("the scan is attached"), atts = Seq(Att("scan.png", safe = true)))))
+    graft.api.Cli.run(spark, List("import", "sync", inbox, store))
+    Seq("emails", "attachments", "audit", "markdown/archive", "markdown/index").foreach(t =>
+      assert(new java.io.File(s"$store/$t").isDirectory, s"$t missing"))
+    val emails = new EmailEtlApi(spark, store).emails
+    assert(emails.count() == 1 && emails.filter("embedding IS NULL").count() == 0)
+  }
+
   test("url screen: canonicalization, gate verdicts, within-batch keep-first dedup, bounds") {
     val rows = api.urlScreen(Seq(
       "http://www.Ex.org:80/a/?utm_s=1&x=1#f", // canon dup of the next, tracked

@@ -8,7 +8,7 @@ import org.json4s.jackson.JsonMethods
   * drive the reference's POST /api/search/emails and /api/search/ask
   * shapes (plus analyze + status + error contracts) with a plain
   * HttpURLConnection client. */
-class RestServerSpec extends SparkSpec {
+class RestServerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   implicit private val formats: Formats = DefaultFormats
 
   private def rawMsg(id: String, subject: String, dateRfc: String, body: String): String =
@@ -31,6 +31,7 @@ class RestServerSpec extends SparkSpec {
     RestServer.start(api, port = 0)
   }
   private def base = s"http://127.0.0.1:${server.getAddress.getPort}"
+  override def afterAll(): Unit = try server.stop(0) finally super.afterAll()
 
   private def http(method: String, path: String, body: Option[String] = None,
       root: String = base): (Int, JValue) = {

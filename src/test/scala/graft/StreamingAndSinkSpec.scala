@@ -2,10 +2,10 @@ package graft
 
 import graft.ingest.Normalize
 import graft.sinks.MarkdownSink
-import graft.streaming.IncrementalSync
 import org.apache.spark.sql.functions._
 
 class StreamingAndSinkSpec extends SparkSpec {
+  import ImportFixture.write
   import spark.implicits._
 
   private def rawMsg(id: String, subject: String, dateRfc: String, body: String): String =
@@ -14,85 +14,65 @@ class StreamingAndSinkSpec extends SparkSpec {
        |"headers":[{"name":"From","value":"a@x.com"},{"name":"Subject","value":"$subject"},{"name":"Date","value":"$dateRfc"}],
        |"body":{"data":"${b64url(body)}","size":1,"attachmentId":null}}}""".stripMargin.replaceAll("\n", "")
 
-  test("G1 streamSync: AvailableNow drains inbox, dedups, idempotent re-run") {
+  /** CLI `import sync`, and the (total_found, processed, skipped) it printed. */
+  private def sync(inbox: String, store: String): (Long, Long, Long) = {
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(graft.api.Cli.run(spark, List("import", "sync", inbox, store)))
+    val stats = out.toString("UTF-8").trim.split(" ").map(_.split("=")).map(kv => kv(0) -> kv(1).toLong).toMap
+    (stats("total_found"), stats("processed"), stats("skipped"))
+  }
+
+  test("G1 import sync: drains, dedups, re-run upserts the update") {
     val inbox = tmpDir("inbox")
-    val store = tmpDir("store") + "/emails"
-    val ckpt = tmpDir("ckpt")
-    java.nio.file.Files.write(java.nio.file.Paths.get(inbox, "b1.json"),
-      Seq(
-        rawMsg("s1", "first", "Mon, 15 Jan 2024 10:00:00 +0000", "one"),
-        rawMsg("s2", "second", "Mon, 15 Jan 2024 11:00:00 +0000", "two"),
-        rawMsg("s2", "second dup", "Mon, 15 Jan 2024 11:00:00 +0000", "two dup")
-      ).mkString("\n").getBytes("UTF-8"))
+    val store = tmpDir("store")
+    write(inbox, "b1.json", Seq(
+      rawMsg("s1", "first", "Mon, 15 Jan 2024 12:00:00 +0000", "one"),
+      rawMsg("s2", "second", "Mon, 15 Jan 2024 11:00:00 +0000", "two"),
+      rawMsg("s2", "second dup", "Mon, 15 Jan 2024 11:00:00 +0000", "two dup")))
+    assert(sync(inbox, store) == ((2L, 2L, 0L)))
+    assert(spark.read.parquet(s"$store/emails").count() == 2)
 
-    IncrementalSync.streamSync(spark, inbox, store, ckpt)
-    val stored = spark.read.parquet(store)
-    assert(stored.count() == 2)
-
-    // new file lands; re-run drains only the delta and upserts
-    java.nio.file.Files.write(java.nio.file.Paths.get(inbox, "b2.json"),
-      Seq(
-        rawMsg("s2", "second updated", "Tue, 16 Jan 2024 09:00:00 +0000", "two v2"),
-        rawMsg("s3", "third", "Tue, 16 Jan 2024 10:00:00 +0000", "three")
-      ).mkString("\n").getBytes("UTF-8"))
-    IncrementalSync.streamSync(spark, inbox, store, ckpt)
-    val after = spark.read.parquet(store)
+    // a new file lands: the re-run reads from the store's latest date, so
+    // s1 is re-read as skipped and the incoming s2 replaces the stored one
+    write(inbox, "b2.json", Seq(
+      rawMsg("s2", "second updated", "Tue, 16 Jan 2024 09:00:00 +0000", "two v2"),
+      rawMsg("s3", "third", "Tue, 16 Jan 2024 10:00:00 +0000", "three")))
+    assert(sync(inbox, store) == ((3L, 1L, 2L)))
+    val after = spark.read.parquet(s"$store/emails")
     assert(after.count() == 3)
     assert(after.filter($"message_id" === "s2").collect()(0)
       .getAs[String]("subject") == "second updated")
+    // nothing new: the boundary message is skipped and the store is unchanged
+    val rows = after.toJSON.collect().toSet
+    assert(sync(inbox, store) == ((1L, 0L, 1L)))
+    assert(spark.read.parquet(s"$store/emails").toJSON.collect().toSet == rows)
   }
 
-  test("G1 streamSync crash recovery: store deleted but staging intact -> staging promoted, no data loss") {
+  test("G1 import sync crash recovery: staging promoted, no data loss") {
     val inbox = tmpDir("cr-inbox")
-    val store = tmpDir("cr-store") + "/emails"
-    val ckpt = tmpDir("cr-ckpt")
-    java.nio.file.Files.write(java.nio.file.Paths.get(inbox, "b1.json"),
-      Seq(rawMsg("c1", "one", "Mon, 15 Jan 2024 10:00:00 +0000", "x"),
-        rawMsg("c2", "two", "Mon, 15 Jan 2024 11:00:00 +0000", "y"))
-        .mkString("\n").getBytes("UTF-8"))
-    IncrementalSync.streamSync(spark, inbox, store, ckpt)
-    assert(spark.read.parquet(store).count() == 2)
+    val store = tmpDir("cr-store")
+    write(inbox, "b1.json", Seq(
+      rawMsg("c1", "one", "Mon, 15 Jan 2024 10:00:00 +0000", "x"),
+      rawMsg("c2", "two", "Mon, 15 Jan 2024 11:00:00 +0000", "y")))
+    sync(inbox, store)
+    assert(spark.read.parquet(s"$store/emails").count() == 2)
 
     // simulate a crash between delete(store) and rename(staging, store):
     // staging holds the complete merged result, the store is gone
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.rename(new org.apache.hadoop.fs.Path(store),
-      new org.apache.hadoop.fs.Path(store + "__staging"))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(store)))
+    val emails = new org.apache.hadoop.fs.Path(s"$store/emails")
+    val staging = new org.apache.hadoop.fs.Path(s"$store/emails__staging")
+    val fs = emails.getFileSystem(spark.sessionState.newHadoopConf())
+    assert(fs.rename(emails, staging))
 
-    // next drain (new file) must first promote staging, then merge — the
-    // pre-crash emails survive
-    java.nio.file.Files.write(java.nio.file.Paths.get(inbox, "b2.json"),
-      Seq(rawMsg("c3", "three", "Tue, 16 Jan 2024 10:00:00 +0000", "z"))
-        .mkString("\n").getBytes("UTF-8"))
-    IncrementalSync.streamSync(spark, inbox, store, ckpt)
-    val after = spark.read.parquet(store)
-    assert(after.count() == 3)
+    // the next sync must first promote staging, then merge: the pre-crash
+    // emails survive though the inbox no longer lists them
+    new java.io.File(inbox, "b1.json").delete()
+    write(inbox, "b2.json", Seq(rawMsg("c3", "three", "Tue, 16 Jan 2024 10:00:00 +0000", "z")))
+    sync(inbox, store)
+    val after = spark.read.parquet(s"$store/emails")
     assert(after.select("message_id").as[String].collect().sorted.toSeq ==
       Seq("c1", "c2", "c3"))
-  }
-
-  test("G1 batchSync: null-date messages pass the cursor instead of being dropped forever") {
-    val existing = Normalize.emails(
-      rawDf(Seq(rawMsg("e1", "old", "Mon, 15 Jan 2024 10:00:00 +0000", "x"))))
-    // a message whose Date header fails RFC-2822 parsing -> date null
-    val raw = rawDf(Seq(
-      rawMsg("e2", "undated", "not a real date", "y"),
-      rawMsg("e3", "new", "Tue, 16 Jan 2024 10:00:00 +0000", "z")))
-    val merged = IncrementalSync.batchSync(existing, raw)
-    assert(merged.count() == 3)
-    assert(merged.filter($"message_id" === "e2").count() == 1)
-  }
-
-  test("G1 batchSync: cursor + overlap + merge") {
-    val existing = Normalize.emails(
-      rawDf(Seq(rawMsg("e1", "old", "Mon, 01 Jan 2024 10:00:00 +0000", "x"))))
-    val raw = rawDf(Seq(
-      rawMsg("e1", "old", "Mon, 01 Jan 2024 10:00:00 +0000", "x"),
-      rawMsg("e2", "new", "Mon, 15 Jan 2024 10:00:00 +0000", "y")))
-    val merged = IncrementalSync.batchSync(existing, raw)
-    assert(merged.count() == 2)
+    assert(!fs.exists(staging))
   }
 
   private def rawDf(lines: Seq[String]) = {

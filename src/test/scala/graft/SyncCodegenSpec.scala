@@ -36,6 +36,12 @@ class SyncCodegenSpec extends SparkSpec {
   }
 
   test("a steady-state sync fits the default code cache: <= 25 compilations and <= 20 jobs") {
+    // the compilation counter is JVM-wide: a query or server thread that an
+    // earlier suite left running would compile into it
+    val threads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.isAlive && !t.isDaemon).map(_.getName).sorted
+    info(s"active streaming queries: ${spark.streams.active.length}; " +
+      s"live non-daemon threads: ${threads.mkString(", ")}")
     val inbox = tmpDir("codegen-inbox")
     val api = new EmailEtlApi(spark, tmpDir("codegen-store"))
     write(inbox, "000.json", (0 until 30).flatMap(d => day(d, 4)))
@@ -59,6 +65,7 @@ class SyncCodegenSpec extends SparkSpec {
       sc.removeSparkListener(listener)
     }
     val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
+    info(s"third sync: $compiled compilations, ${jobs.get} Spark jobs")
     assert(stats("processed") == 15L && stats("skipped") == 1L, s"$stats")
     assert(compiled <= 25 && jobs.get <= 20,
       s"third sync compiled $compiled classes and ran ${jobs.get} Spark jobs")

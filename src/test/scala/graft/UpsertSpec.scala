@@ -40,17 +40,6 @@ class UpsertSpec extends SparkSpec {
       == "NEW subject 2")
   }
 
-  test("A9 column upsert: overwrite present keys, preserve others") {
-    val target = Seq((1L, Seq(1.0f)), (2L, Seq(2.0f)), (3L, null.asInstanceOf[Seq[Float]]))
-      .toDF("id", "embedding")
-    val updates = Seq((2L, Seq(9.0f)), (3L, Seq(8.0f))).toDF("id", "embedding")
-    val got = Upsert.updateColumn(target, updates, "id", "embedding")
-      .orderBy("id").as[(Long, Seq[Float])].collect()
-    assert(got(0)._2 == Seq(1.0f))
-    assert(got(1)._2 == Seq(9.0f))
-    assert(got(2)._2 == Seq(8.0f))
-  }
-
   test("A4 merge order is total: identical key+version+side with divergent content resolves the same way every run") {
     val dupBatch = Seq(
       ("m9", "variant A", ts("2024-03-01 00:00:00")),
@@ -61,25 +50,5 @@ class UpsertSpec extends SparkSpec {
         .filter($"message_id" === "m9").collect()(0).getString(1)
     }
     assert(winners.distinct.length == 1, s"nondeterministic winner: $winners")
-  }
-
-  test("A9 column upsert preserves target row count under duplicate update keys") {
-    val target = Seq((1L, Seq(1.0f)), (2L, Seq(2.0f))).toDF("id", "embedding")
-    val dupUpdates = Seq((2L, Seq(9.0f)), (2L, Seq(7.0f))).toDF("id", "embedding")
-    val got = Upsert.updateColumn(target, dupUpdates, "id", "embedding")
-      .orderBy("id").as[(Long, Seq[Float])].collect()
-    assert(got.length == 2, "UPDATE semantics: row count must not change")
-    assert(got(1)._2 == Seq(9.0f)) // deterministic greatest-value resolution
-  }
-
-  test("A10 kv upsert on composite key + F25 map collect") {
-    val ex = Seq(("gmail", "k1", "v1", 1L), ("gmail", "k2", "v2", 1L))
-      .toDF("provider", "config_key", "config_value", "version")
-    val in = Seq(("gmail", "k2", "v2b", 2L), ("outlook", "k1", "o1", 2L))
-      .toDF("provider", "config_key", "config_value", "version")
-    val merged = Upsert.upsertKv(ex, in, Seq("provider", "config_key"), "version")
-    val m = Upsert.kvToMap(
-      merged.filter($"provider" === "gmail"), "config_key", "config_value")
-    assert(m == Map("k1" -> "v1", "k2" -> "v2b"))
   }
 }
