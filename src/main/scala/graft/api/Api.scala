@@ -16,7 +16,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * and its message's safe / unsafe attachment counts. */
 private final case class BatchLine(messageId: String, line: Long,
     date: Option[java.sql.Timestamp], updatedAt: Option[java.sql.Timestamp],
-    safe: Int, unsafe: Int)
+    safe: Int, unsafe: Int, month: Int)
+
+/** What [[EmailEtlApi.importFull]] learns about one stored row it asked
+  * for: its version, its archive month ([[MarkdownSink.monthKey]]), the
+  * `emails` file that holds it, and whether it waits for an embedding. */
+private final case class StoredRow(messageId: String, updatedAt: Option[java.sql.Timestamp],
+    month: Int, file: String, backlog: Boolean)
+
+/** The `emails` files a commit stages: its part of the swap, and the
+  * embedded count (read once the stage is written). */
+private final case class EmailsChange(change: TableSwap.Change, embedded: () => Long)
 
 private object BatchLine {
   /** `orderBy(col("date").desc, col("message_id"))`: newest first, undated
@@ -72,12 +82,17 @@ final class EmailEtlApi(
     * embedded / total counters.
     *
     * One pass: the inbox is parsed and normalized once into a persisted
-    * batch (the lines in range, with their attachment rows: O(batch));
-    * each table is written once, the store by one write that merges the
-    * batch and embeds the backlog. No counter has a query of its own:
-    * `failed` and `total` are observations on the parse and the store
-    * write, `embedded` one on the backlog page, and the rest follow from
-    * the batch's keys, which the merge needs on the driver anyway.
+    * batch (the lines in range, with their attachment rows: O(batch)).
+    * Every table the import touches is staged once and all of them are
+    * committed by one [[TableSwap]]. `emails` is copy-on-write at file
+    * granularity: only the files that hold a key the batch replaces or a
+    * row to embed are rewritten, the batch goes into files of its own,
+    * and the backlog page is embedded in the same write. The archive
+    * rewrites only the months the batch touches. No counter has a query
+    * of its own: `failed` is an observation on the parse, `total` one on
+    * the store lookup plus the new keys, `embedded` one on the backlog
+    * page, and the rest follow from the batch's keys, which the merge
+    * needs on the driver anyway.
     *
     * Every later query of the import reads the persisted batch and so
     * carries its plan: the batch plan's size is paid when the batch is
@@ -87,14 +102,14 @@ final class EmailEtlApi(
     * Spark compiles each query's generated classes into one JVM-wide
     * cache, 100 classes unless the session sets
     * `spark.sql.codegen.cache.maxEntries`. A sync is a handful of
-    * queries, each planned the same way every time, and needs 74 classes;
+    * queries, each planned the same way every time, and needs 78 classes;
     * the next sync finds them there and compiles none. The cache is four
     * LRU segments of 25, though, and a class's segment follows a hash
     * that includes its class loader's identity, so it differs from JVM to
     * JVM. In a JVM where more than 25 of the sync's classes share a
     * segment, that segment evicts its own classes and every sync
     * recompiles them (23 to 32 compilations where none would do);
-    * `SyncCodegenSpec` guards the bound. Keep a new step inside a query
+    * `SyncCodegenSpec` guards both bounds. Keep a new step inside a query
     * that already runs rather than adding one. */
   def importFull(inboxDir: String,
       maxResults: Option[Int] = None,
@@ -126,9 +141,10 @@ final class EmailEtlApi(
       val all = lines.select(col("message_id"), col("__line"), col("date"),
           col("updated_at"),
           size(filter(col("attachments"), a => a.getField("is_safe"))),
-          size(filter(col("attachments"), a => !a.getField("is_safe"))))
+          size(filter(col("attachments"), a => !a.getField("is_safe"))),
+          MarkdownSink.monthKey(col("date")))
         .collect().map(r => BatchLine(r.getString(0), r.getLong(1),
-          Option(r.getTimestamp(2)), Option(r.getTimestamp(3)), r.getInt(4), r.getInt(5)))
+          Option(r.getTimestamp(2)), Option(r.getTimestamp(3)), r.getInt(4), r.getInt(5), r.getInt(6)))
       val messages = all.groupBy(_.messageId).values.map(_.minBy(_.line)).toSeq
       def newest(ms: Seq[BatchLine]): Seq[BatchLine] =
         maxResults.fold(ms)(n => ms.sorted(BatchLine.newestFirst).take(math.max(0, n)))
@@ -137,59 +153,105 @@ final class EmailEtlApi(
       // `after:`, which filters on the provider's own receipt date. Its
       // key joins the store lookup the merge runs anyway.
       val undated = if (startDate.isEmpty) Nil else messages.filter(_.date.isEmpty).map(_.messageId)
+      // The store is asked once, for the versions of these keys and the
+      // file that holds each: the rows of the batch's months (the archive
+      // months the import may touch) and, when it embeds, the backlog rows
+      // (null embedding, a body) come along with their files. The same
+      // scan counts the stored rows: with the batch's new keys, the
+      // committed total.
       val storeExists = tableExists("emails")
-      val stored: Map[String, Option[java.sql.Timestamp]] = {
-        val asked = (newest(messages).map(_.messageId) ++ undated).distinct
-        if (!storeExists || asked.isEmpty) Map.empty
-        else emails.filter(col("message_id").isin(asked: _*))
-          .select("message_id", "updated_at").collect()
-          .map(r => r.getString(0) -> Option(r.getTimestamp(1))).toMap
-      }
+      val live = TableSwap.liveFiles(spark, emailsPath)
+      val asked = (newest(messages).map(_.messageId) ++ undated).distinct
+      val batchMonths = messages.map(_.month).distinct
+      val wanted = Seq(col("message_id").isin(asked: _*), MarkdownSink.inMonths(batchMonths)) ++
+        (if (generateEmbeddings) Seq(Backlog) else Nil)
+      val stock = Observation()
+      val found =
+        if (!storeExists) Nil
+        else emails.observe(stock, count(lit(1)).as("rows")).filter(wanted.reduce(_ || _))
+          .select(col("message_id"), col("updated_at"), MarkdownSink.monthKey(col("date")),
+            col("_metadata.file_name"), Backlog)
+          .collect().map(r => StoredRow(r.getString(0), Option(r.getTimestamp(1)), r.getInt(2),
+            r.getString(3), r.getBoolean(4))).toSeq
+      val storedRows = if (storeExists) observed(stock, "rows") else 0L
+      val askedSet = asked.toSet
+      val stored = found.filter(r => askedSet(r.messageId)).map(r => r.messageId -> r).toMap
       val resident = undated.filter(stored.contains).toSet
       val chosen = newest(messages.filterNot(m => resident(m.messageId)))
       val keys = chosen.map(_.messageId)
       // A4, in Upsert.mergeByKey's order: the greater `updated_at` wins,
       // null ranks last, and the incoming row wins a tie
-      val lost = chosen.filter(m => stored.get(m.messageId).flatten
+      val lost = chosen.filter(m => stored.get(m.messageId).flatMap(_.updatedAt)
         .exists(v => m.updatedAt.forall(v.after))).map(_.messageId).toSet
       val fresh = chosen.filterNot(m => stored.contains(m.messageId))
+      val replaced = chosen.filter(m => stored.contains(m.messageId) && !lost(m.messageId))
+        .map(m => stored(m.messageId))
+      val arrivingLines = chosen.filterNot(m => lost(m.messageId))
+      val replacedKeys = keys.filterNot(lost)
 
       val incoming =
         if (chosen.size == all.length) lines else only(lines, "__line", chosen.map(_.line))
       val arriving = except(incoming, "message_id", lost)
         .select(Schemas.emailSchema.fieldNames.map(col).toSeq: _*)
-      val merged =
-        if (!storeExists) arriving
-        else except(emails, "message_id", keys.filterNot(lost)).unionByName(arriving)
-      val embedded = Observation()
-      val store =
-        if (!generateEmbeddings) merged
-        else withEmbedded(merged,
-          backlogPage(merged).observe(embedded, count(lit(1)).as("embedded")))
-      val wrote = Observation()
-      replaceTable("emails", store.observe(wrote, count(lit(1)).as("total")))
-
+      val touched = replaced.map(_.file) ++
+        (if (generateEmbeddings) found.filter(_.backlog).map(_.file) else Nil)
+      // the batch's size in the store, estimated from the live files
+      val arrivingBytes =
+        if (storedRows == 0) 0L else arrivingLines.size * live.map(_.bytes).sum / storedRows
       // attachments of every line of THIS batch's emails (email_id =
       // surrogate of the message_id); merged with any prior table so
       // incremental imports never drop earlier attachments
       val batchAtts =
         (if (chosen.size == messages.size) lines else only(lines, "message_id", keys))
           .select(explode(col("attachments")).as("a")).select("a.*")
-      replaceTable("attachments",
+      val allAtts =
         if (!tableExists("attachments")) batchAtts
         else {
           val byId = Window.partitionBy(col("id")).orderBy(col("id"))
           attachments.unionByName(batchAtts)
             .withColumn("__n", row_number().over(byId))
             .filter(col("__n") === 1).drop("__n")
-        })
+        }
+      // The archive months that hold an arriving or a replaced row, and the
+      // index, are rendered from the committed rows: the live rows the
+      // batch does not replace, and the batch. Neither reads an embedding,
+      // so they need not wait for the emails stage.
+      val months = (arrivingLines.map(_.month) ++ replaced.map(_.month)).distinct
+      val batchRows = if (storeExists && arrivingLines.isEmpty) None else Some(arriving)
+      def committed(files: Seq[String]): DataFrame =
+        ((if (files.isEmpty) None
+          else Some(except(readEmails(files.map(f => s"$emailsPath/$f")), "message_id", replacedKeys)))
+          ++ batchRows).reduce(_ unionByName _)
+      val archive =
+        if (!tableExists("markdown/archive")) Some(() =>
+          MarkdownSink.stageArchive(committed(live.map(_.name)), storeDir, "markdown/archive", None))
+        else if (months.isEmpty) None
+        else Some(() => MarkdownSink.stageArchive(committed(
+            // every stored row of a batch month came with the lookup; a
+            // replaced row's month outside them may be in any live file
+            if (months.forall(batchMonths.contains)) found.filter(r => months.contains(r.month)).map(_.file).distinct
+            else live.map(_.name)),
+          storeDir, "markdown/archive", Some(months)))
+      val index =
+        if (batchRows.isEmpty && tableExists("markdown/index")) None
+        else Some(() => MarkdownSink.stageIndex(committed(live.map(_.name)), storeDir, "markdown/index"))
+      // The tables are staged at once, each query on a thread of its own:
+      // a sync is a handful of small jobs, and one after another they
+      // leave the cores idle while the driver plans and commits each.
+      var emailsChange: Option[EmailsChange] = None
+      val changes = together(Seq(
+        () => {
+          emailsChange = stageEmails(live, touched.toSet, replacedKeys, batchRows,
+            arrivingBytes, generateEmbeddings)
+          emailsChange.map(_.change).toSeq
+        },
+        () => Seq(TableSwap.change(spark, storeDir, "attachments",
+          TableSwap.stage(allAtts, storeDir, "attachments"), Seq(""))),
+        () => Seq(TableSwap.change(spark, storeDir, "audit",
+          TableSwap.stage(Normalize.auditRows(incoming, "imported"), storeDir, "audit"), Nil))) ++
+        (archive ++ index).map(stage => () => Seq(stage())): _*)
+      TableSwap.swap(spark, storeDir, changes.flatten)
 
-      Normalize.auditRows(incoming, "imported")
-        .write.mode("append").parquet(s"$storeDir/audit")
-      MarkdownSink.write(emails, s"$storeDir/markdown")
-
-      def observed(o: Observation, key: String): Long =
-        Option(o.get.getOrElse(key, null)).fold(0L)(_.asInstanceOf[Number].longValue)
       Map(
         "total_found" -> chosen.size.toLong,
         "processed" -> fresh.size.toLong,
@@ -197,8 +259,8 @@ final class EmailEtlApi(
         "failed" -> observed(parsed, "failed"),
         "attachments_processed" -> fresh.map(_.safe.toLong).sum,
         "attachments_rejected" -> fresh.map(_.unsafe.toLong).sum,
-        "embedded" -> (if (generateEmbeddings) observed(embedded, "embedded") else 0L),
-        "total" -> observed(wrote, "total"))
+        "embedded" -> emailsChange.fold(0L)(_.embedded()),
+        "total" -> (storedRows + fresh.size))
     } finally lines.unpersist()
   }
 
@@ -229,13 +291,86 @@ final class EmailEtlApi(
       generateEmbeddings = generateEmbeddings)
   }
 
-  /** Embedding pass: B4 backlog → H1 batched embed → A9 column upsert. */
+  /** Embedding pass: B4 backlog → H1 batched embed → A9 column upsert.
+    * Only the `emails` files that hold a backlog row are rewritten. */
   def embedBacklog(): Long = {
     recoverSwaps()
-    val page = backlogPage(emails)
-    val n = page.count()
-    if (n > 0) replaceTable("emails", withEmbedded(emails, page))
-    n
+    if (!tableExists("emails")) return 0L
+    val touched = emails.filter(Backlog).select(col("_metadata.file_name")).distinct()
+      .collect().map(_.getString(0)).toSet
+    stageEmails(TableSwap.liveFiles(spark, emailsPath), touched, Nil, None, 0, embed = true)
+      .fold(0L) { e => TableSwap.swap(spark, storeDir, Seq(e.change)); e.embedded() }
+  }
+
+  /** Rows that wait for an embedding: no embedding yet, and a body. */
+  private val Backlog = col("embedding").isNull &&
+    (col("body_plain").isNotNull || col("body_markdown").isNotNull)
+
+  private def readEmails(paths: Seq[String]): DataFrame =
+    spark.read.schema(Schemas.emailSchema).parquet(paths: _*)
+
+  private def observed(o: Observation, key: String): Long =
+    Option(o.get.getOrElse(key, null)).fold(0L)(_.asInstanceOf[Number].longValue)
+
+  /** Stages the `emails` files of a commit: the rows of `touched` live
+    * files, and of the trailing files folded in with them, minus the
+    * `replacedKeys` the batch replaces; then `arriving`, the batch (about
+    * `arrivingBytes` in the store), in files of its own; with the backlog
+    * page of both embedded when `embed`. None when there is nothing to
+    * write.
+    *
+    * File count stays bounded like a binary counter: newest first, every
+    * live file no larger than what the commit writes so far is folded into
+    * it. The batch keeps files of its own because the next sync re-reads
+    * its newest message and so touches them: were the batch merged into
+    * the rewritten rows, each sync would rewrite its predecessor's whole
+    * output. */
+  private def stageEmails(live: Seq[TableSwap.LiveFile], touched: Set[String],
+      replacedKeys: Seq[String], arriving: Option[DataFrame], arrivingBytes: Long,
+      embed: Boolean): Option[EmailsChange] = {
+    var writing = live.filter(f => touched(f.name)).map(_.bytes).sum + arrivingBytes
+    val trailing = live.reverseIterator.filterNot(f => touched(f.name)).buffered
+    val folded = scala.collection.mutable.Set[String]()
+    while (trailing.hasNext && trailing.head.bytes <= writing) {
+      writing += trailing.head.bytes
+      folded += trailing.next().name
+    }
+    val rewrite = live.filter(f => touched(f.name) || folded(f.name))
+    val survivors =
+      if (rewrite.isEmpty) None
+      else Some(except(readEmails(rewrite.map(f => s"$emailsPath/${f.name}")), "message_id", replacedKeys))
+    // The rewritten rows come first, as one file (empty when the batch
+    // replaced them all); the batch follows in a file per inbox file it
+    // came from. A union of two single partitions would run as one, so
+    // only the rewritten side is coalesced.
+    val sides = (survivors.map(_.coalesce(1)) ++ arriving).toSeq
+    if (sides.isEmpty) return None
+    val merged = sides.reduce(_ unionByName _)
+    val embedded = Observation()
+    val staged = TableSwap.stage(
+      if (!embed) merged
+      else withEmbedded(merged, backlogPage(merged).observe(embedded, count(lit(1)).as("embedded"))),
+      storeDir, "emails")
+    val gen = live.map(_.gen).maxOption.getOrElse(0L) + 1
+    Some(EmailsChange(
+      TableSwap.Change("emails", staged.zipWithIndex.map { case (f, k) => f -> TableSwap.genName(gen, k) },
+        rewrite.map(_.name), create = !tableExists("emails")),
+      () => if (embed) observed(embedded, "embedded") else 0L))
+  }
+
+  /** Runs `tasks` at once, each on a thread of its own, which inherits the
+    * caller's Spark job properties, and returns their results in order.
+    * A failure is rethrown once every task has stopped, so no task still
+    * writes when the caller recovers. */
+  private def together[A](tasks: (() => A)*): Seq[A] = {
+    val runs = tasks.map { t =>
+      val out = new java.util.concurrent.atomic.AtomicReference[Either[Throwable, A]]()
+      val th = new Thread(() => out.set(try Right(t()) catch { case e: Throwable => Left(e) }))
+      th.start()
+      (th, out)
+    }
+    runs.foreach(_._1.join())
+    runs.map(_._2.get).map(_.fold(e => throw e, identity))
   }
 
   /** B4: the backlog page of `rows` (emails-shaped) — rows with a null
@@ -260,13 +395,9 @@ final class EmailEtlApi(
       }.toSeq: _*)
   }
 
-  private def replaceTable(name: String, df: DataFrame): Unit =
-    TableSwap.replace(df, s"$storeDir/$name")
-
-  /** Finishes the swap of a table that a crash cut between its delete and
-    * its rename, so a writer never mistakes that table for a missing one. */
-  private def recoverSwaps(): Unit =
-    Seq("emails", "attachments").foreach(t => TableSwap.recover(spark, s"$storeDir/$t"))
+  /** Finishes or drops a swap that a crash cut short, so a writer never
+    * sees part of a commit or mistakes a table for a missing one. */
+  private def recoverSwaps(): Unit = TableSwap.recover(spark, storeDir, EmailEtlApi.Tables)
 
   /** `search semantic` (reference: main.py:239-269; limit 10 ∈ [1,100]).
     * `columns` are the hits' columns ([[EmailSearch.hybridSearch]]). */
@@ -549,6 +680,11 @@ final class EmailEtlApi(
       .drop("n_word_chars")
       .orderBy(col("text_id"))
   }
+}
+
+object EmailEtlApi {
+  /** The store's tables, as paths under the store directory. */
+  val Tables: Seq[String] = Seq("emails", "attachments", "audit", "markdown/archive", "markdown/index")
 }
 
 /** Thin CLI front-end mirroring the reference verbs (reference: main.py). */

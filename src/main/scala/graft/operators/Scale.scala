@@ -73,13 +73,6 @@ object Scale {
     df.repartition(parts)
   }
 
-  /** True if the physical plan of `df` contains a shuffle exchange. */
-  def hasShuffleExchange(df: DataFrame): Boolean =
-    df.queryExecution.executedPlan.exists {
-      case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => true
-      case _ => false
-    }
-
   /** 32-bit Morton (z-order) interleave of two 16-bit non-negative
     * values: bit i of `x` lands at position 2i, bit i of `y` at 2i+1.
     * Magic-number bit spreading — a static 9-op expression tree per

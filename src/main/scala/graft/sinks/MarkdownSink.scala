@@ -1,7 +1,9 @@
 package graft.sinks
 
 import graft.functions.EmailFunctions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.store.TableSwap
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 /** A5/A6 — the markdown archive re-expressed as a partitioned columnar
@@ -11,6 +13,13 @@ import org.apache.spark.sql.functions._
   * Layout mirrors the reference's `YYYY/MM/` directory scheme
   * (reference: src/markdown_storage.py:52-65) as `partitionBy(year, month)`
   * — which doubles as partition pruning for date-ranged queries.
+  *
+  * The reference writes one `.md` file per new email; here a commit
+  * stages only the months that hold an arriving or a replaced row,
+  * rendered from the committed `emails` rows of those months, and
+  * replaces those months' files through a [[TableSwap]]
+  * ([[stageArchive]]). The index is a projection of the committed rows
+  * ([[stageIndex]]); no whole-store render is kept.
   */
 object MarkdownSink {
 
@@ -28,36 +37,60 @@ object MarkdownSink {
           lit(""),
           coalesce(col("body_markdown"), col("body_plain"), lit(""))))
 
-  /** A5: write the rendered archive partitioned by year/month and return
-    * the derived index (reference: markdown_storage.py:67-132; index
-    * entries markdown_storage.py:122-129). The returned index reads the
-    * just-written parquet: already materialized, no lingering cached
-    * blocks, no recompute. */
+  /** A5: write the rendered archive of `emails` partitioned by year/month
+    * and its index into `outDir`, as one swap, and return the index
+    * (reference: markdown_storage.py:67-132; index entries
+    * markdown_storage.py:122-129). The returned index reads the
+    * just-written parquet: already materialized, no recompute. */
   def writeArchive(emails: DataFrame, outDir: String): DataFrame = {
-    write(emails, outDir)
-    emails.sparkSession.read.parquet(s"$outDir/index")
+    val spark = emails.sparkSession
+    TableSwap.swap(spark, outDir, Seq(
+      stageArchive(emails, outDir, "archive", None),
+      stageIndex(emails, outDir, "index")))
+    spark.read.parquet(s"$outDir/index")
   }
 
-  /** [[writeArchive]] without reading the index back. */
-  def write(emails: DataFrame, outDir: String): Unit = {
-    // render once: the archive write and the index write both consume
-    // the same pipeline — unpersisted, the markdown rendering would run
-    // twice
-    val rendered = renderMarkdown(emails)
-      .withColumn("year", year(col("date")))
-      .withColumn("month", month(col("date")))
-      .persist()
-    rendered
-      .select("message_id", "markdown_path", "md", "year", "month")
-      .write.mode("overwrite")
-      .partitionBy("year", "month")
-      .parquet(s"$outDir/archive")
-    rendered.select(
-      col("message_id"), col("markdown_path").as("path"), col("subject"),
-      col("sender"), col("date"), col("has_attachments"))
-      .write.mode("overwrite").parquet(s"$outDir/index")
-    rendered.unpersist()
+  /** A row's archive month: `year * 100 + month` of its date in the
+    * session time zone, the partition it lands in; -1 when undated. */
+  def monthKey(date: Column): Column = coalesce(year(date) * 100 + month(date), lit(-1))
+
+  /** Whether a row's [[monthKey]] is one of `months`. The months ride in
+    * an array constant, which Spark passes by reference: literals in the
+    * generated code would make each new set of months a new class. */
+  def inMonths(months: Seq[Int]): Column = array_contains(typedLit(months.toArray), monthKey(col("date")))
+
+  /** The partition directory of a [[monthKey]], as the partitioned write
+    * names it. */
+  private def monthDir(key: Int): String = {
+    val (y, m) =
+      if (key < 0) (ExternalCatalogUtils.DEFAULT_PARTITION_NAME, ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
+      else ((key / 100).toString, (key % 100).toString)
+    s"year=$y/month=$m/"
   }
+
+  /** Stages the archive `table` (under `root`) for a [[TableSwap]]: the
+    * archive months `months` rendered from the `emails` rows of those
+    * months, replacing the live files of those months; every month,
+    * replacing the whole table, when `months` is None. `emails` needs to
+    * hold every row of those months and may hold others. */
+  def stageArchive(emails: DataFrame, root: String, table: String,
+      months: Option[Seq[Int]]): TableSwap.Change = {
+    val rows = months.fold(emails)(ms => emails.filter(inMonths(ms)))
+    val staged = TableSwap.stage(
+      renderMarkdown(rows)
+        .select(col("message_id"), col("markdown_path"), col("md"),
+          year(col("date")).as("year"), month(col("date")).as("month")),
+      root, table, Seq("year", "month"))
+    TableSwap.change(emails.sparkSession, root, table, staged, months.fold(Seq(""))(_.map(monthDir)))
+  }
+
+  /** Stages the index `table` (under `root`), the projection of all of
+    * `emails`, replacing the whole table. */
+  def stageIndex(emails: DataFrame, root: String, table: String): TableSwap.Change =
+    TableSwap.change(emails.sparkSession, root, table, TableSwap.stage(
+      emails.select(col("message_id"), markdownPath(col("date"), col("subject")).as("path"),
+        col("subject"), col("sender"), col("date"), col("has_attachments")),
+      root, table), Seq(""))
 
   /** A6: point read by message_id — index lookup + content join +
     * frontmatter split (reference: markdown_storage.py:192-224). */

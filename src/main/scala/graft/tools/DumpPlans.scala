@@ -3,10 +3,14 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Regenerates PLANS.md: the formatted physical plan of each headline
-  * query, so the scan/pushdown/broadcast/exchange structure argued in
-  * SCALE.md is inspectable without running anything.
-  * Usage: runMain graft.tools.DumpPlans [sfDir] [outFile] */
+/** Dumps formatted physical plans (`explain("formatted")`), so the
+  * scan/pushdown/broadcast/exchange structure argued in SCALE.md is
+  * inspectable without running anything. Two output modes:
+  *  - `runMain graft.tools.DumpPlans [sfDir] [outFile]` regenerates
+  *    PLANS.md, the plans of the headline queries;
+  *  - `runMain graft.tools.DumpPlans --files <suffix> <q1,q2,...> [sfDir] [outDir]`
+  *    writes one file per named query, `<outDir>/<name>_<suffix>.txt`
+  *    (default outDir `plans/r14`): before/after plan evidence. */
 object DumpPlans {
   private val Headline = Seq(
     "q1_agg", "q3_shipping", "q5_nation_revenue", "e5_asof_join",
@@ -91,30 +95,47 @@ object DumpPlans {
     // no encoder round-trip)
     "embed_whiten_exact")
 
-  def main(args: Array[String]): Unit = {
-    val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val out = if (args.length > 1) args(1) else "PLANS.md"
+  def main(args: Array[String]): Unit = args.toList match {
+    case "--files" :: suffix :: names :: rest =>
+      val dir = rest.headOption.getOrElse("/root/testdata/sf0.001")
+      val outDir = rest.lift(1).getOrElse("plans/r14")
+      Files.createDirectories(Paths.get(outDir))
+      withPlans(names.split(",").toSeq, dir) { (name, formatted) =>
+        Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), formatted)
+        println(s"[planfile] $outDir/${name}_$suffix.txt")
+      }
+    case "--files" :: _ =>
+      sys.error("usage: DumpPlans --files <suffix> <q1,q2,...> [sfDir] [outDir]")
+    case _ =>
+      val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
+      val out = if (args.length > 1) args(1) else "PLANS.md"
+      val sb = new StringBuilder
+      sb.append("# PLANS — formatted physical plans of the headline queries\n\n")
+      sb.append(s"Generated by `graft.tools.DumpPlans` against `$dir`.\n")
+      sb.append("Read together with SCALE.md: every pushed filter, broadcast\n")
+      sb.append("side, exchange and codegen span claimed there is visible here.\n")
+      withPlans(Headline, dir) { (name, formatted) =>
+        sb.append(s"\n## $name\n\n```\n$formatted```\n")
+      }
+      Files.writeString(Paths.get(out), sb.toString)
+      println(s"[plans] wrote $out (${Headline.size} queries)")
+  }
+
+  /** Hands the formatted plan of each query in `names`, built over the
+    * tables in `dir`, to `emit`, in a local session of its own. */
+  private def withPlans(names: Seq[String], dir: String)(emit: (String, String) => Unit): Unit = {
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans of the headline queries\n\n")
-    sb.append(s"Generated by `graft.tools.DumpPlans` against `$dir`.\n")
-    sb.append("Read together with SCALE.md: every pushed filter, broadcast\n")
-    sb.append("side, exchange and codegen span claimed there is visible here.\n")
-    Headline.foreach { name =>
+    names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, dir)
-      val formatted = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      sb.append(s"\n## $name\n\n```\n$formatted```\n")
+      emit(name, df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
       spark.catalog.clearCache()
       graft.operators.ConnectedComponents.freeAll()
     }
-    Files.writeString(Paths.get(out), sb.toString)
-    println(s"[plans] wrote $out (${Headline.size} queries)")
     spark.stop()
   }
 }

@@ -10,7 +10,12 @@ import org.apache.spark.metrics.source.CodegenMetrics
   * evicts what the next sync needs and recompiles all of it every time.
   * Three syncs of the same shape run in one JVM; the third may compile
   * only the classes whose source really changes between syncs (its date
-  * filter literal), and must stay within a fixed number of Spark jobs. */
+  * filter literal), and must stay within a fixed number of Spark jobs.
+  *
+  * That bound holds only while the sync's classes fit the cache's four
+  * LRU segments of 25, and which segment a class lands in moves from JVM
+  * to JVM. So the sync's working set is also bounded on its own: the
+  * classes one steady-state sync leaves in a cache emptied before it. */
 class SyncCodegenSpec extends SparkSpec {
   import ImportFixture._
 
@@ -69,5 +74,23 @@ class SyncCodegenSpec extends SparkSpec {
     assert(stats("processed") == 15L && stats("skipped") == 1L, s"$stats")
     assert(compiled <= 25 && jobs.get <= 20,
       s"third sync compiled $compiled classes and ran ${jobs.get} Spark jobs")
+  }
+
+  test("a steady-state sync needs at most 78 generated classes") {
+    val inbox = tmpDir("codegen-ws-inbox")
+    val api = new EmailEtlApi(spark, tmpDir("codegen-ws-store"))
+    write(inbox, "000.json", (0 until 30).flatMap(d => day(d, 4)))
+    api.importFull(inbox)
+    write(inbox, "001.json", day(30, 15))
+    api.syncIncremental(inbox)
+    write(inbox, "002.json", day(31, 15))
+    org.apache.spark.CodegenCache.clear()
+    val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val stats = api.syncIncremental(inbox)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
+    val classes = org.apache.spark.CodegenCache.size
+    info(s"sync from an empty code cache: $classes classes cached, $compiled compilations")
+    assert(stats("processed") == 15L && stats("skipped") == 1L, s"$stats")
+    assert(classes <= 78, s"a steady-state sync compiled $classes distinct classes")
   }
 }
