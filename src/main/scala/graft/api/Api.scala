@@ -4,7 +4,6 @@ import graft.enrich._
 import graft.ingest.Normalize
 import graft.model.Schemas
 import graft.search.{EmailSearch, SearchFilters}
-import graft.sinks.MarkdownSink
 import graft.store.TableSwap
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -16,13 +15,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * and its message's safe / unsafe attachment counts. */
 private final case class BatchLine(messageId: String, line: Long,
     date: Option[java.sql.Timestamp], updatedAt: Option[java.sql.Timestamp],
-    safe: Int, unsafe: Int, month: Int)
+    safe: Int, unsafe: Int)
 
 /** What [[EmailEtlApi.importFull]] learns about one stored row it asked
-  * for: its version, its archive month ([[MarkdownSink.monthKey]]), the
-  * `emails` file that holds it, and whether it waits for an embedding. */
+  * for: its version, the `emails` file that holds it, and whether it
+  * waits for an embedding. */
 private final case class StoredRow(messageId: String, updatedAt: Option[java.sql.Timestamp],
-    month: Int, file: String, backlog: Boolean)
+    file: String, backlog: Boolean)
 
 /** The `emails` files a commit stages: its part of the swap, and the
   * embedded count (read once the stage is written). */
@@ -70,9 +69,11 @@ final class EmailEtlApi(
   private def search = new EmailSearch(emails)
 
   /** `import full` (reference: main.py:163-207, src/etl_pipeline.py:32-91):
-    * normalize, merge (A4), write attachments/audit, render markdown
-    * archive, embed backlog (A9). Parameters mirror EmailImportRequest
-    * (reference: src/api/models.py:55-71): `startDate` is the `after:`
+    * normalize, merge (A4), write attachments/audit, embed backlog (A9).
+    * The markdown archive and its index are not stored: they are
+    * projections of `emails`, rendered on read ([[graft.sinks.MarkdownSink]]).
+    * Parameters mirror EmailImportRequest (reference:
+    * src/api/models.py:55-71): `startDate` is the `after:`
     * date filter, `maxResults` caps the listing (newest-first, like the
     * provider's recency-ordered message list; tie-broken by message_id
     * for determinism), `generateEmbeddings` gates the A9 pass. Returned
@@ -83,13 +84,12 @@ final class EmailEtlApi(
     *
     * One pass: the inbox is parsed and normalized once into a persisted
     * batch (the lines in range, with their attachment rows: O(batch)).
-    * Every table the import touches is staged once and all of them are
-    * committed by one [[TableSwap]]. `emails` is copy-on-write at file
-    * granularity: only the files that hold a key the batch replaces or a
-    * row to embed are rewritten, the batch goes into files of its own,
-    * and the backlog page is embedded in the same write. The archive
-    * rewrites only the months the batch touches. No counter has a query
-    * of its own: `failed` is an observation on the parse, `total` one on
+    * Each of the three tables (`emails`, `attachments`, `audit`) is staged
+    * once and all of them are committed by one [[TableSwap]]. `emails` is
+    * copy-on-write at file granularity: only the files that hold a key the
+    * batch replaces or a row to embed are rewritten, the batch goes into
+    * files of its own, and the backlog page is embedded in the same
+    * write. No counter has a query of its own: `failed` is an observation on the parse, `total` one on
     * the store lookup plus the new keys, `embedded` one on the backlog
     * page, and the rest follow from the batch's keys, which the merge
     * needs on the driver anyway.
@@ -102,7 +102,7 @@ final class EmailEtlApi(
     * Spark compiles each query's generated classes into one JVM-wide
     * cache, 100 classes unless the session sets
     * `spark.sql.codegen.cache.maxEntries`. A sync is a handful of
-    * queries, each planned the same way every time, and needs 78 classes;
+    * queries, each planned the same way every time, and needs 63 classes;
     * the next sync finds them there and compiles none. The cache is four
     * LRU segments of 25, though, and a class's segment follows a hash
     * that includes its class loader's identity, so it differs from JVM to
@@ -141,10 +141,9 @@ final class EmailEtlApi(
       val all = lines.select(col("message_id"), col("__line"), col("date"),
           col("updated_at"),
           size(filter(col("attachments"), a => a.getField("is_safe"))),
-          size(filter(col("attachments"), a => !a.getField("is_safe"))),
-          MarkdownSink.monthKey(col("date")))
+          size(filter(col("attachments"), a => !a.getField("is_safe"))))
         .collect().map(r => BatchLine(r.getString(0), r.getLong(1),
-          Option(r.getTimestamp(2)), Option(r.getTimestamp(3)), r.getInt(4), r.getInt(5), r.getInt(6)))
+          Option(r.getTimestamp(2)), Option(r.getTimestamp(3)), r.getInt(4), r.getInt(5)))
       val messages = all.groupBy(_.messageId).values.map(_.minBy(_.line)).toSeq
       def newest(ms: Seq[BatchLine]): Seq[BatchLine] =
         maxResults.fold(ms)(n => ms.sorted(BatchLine.newestFirst).take(math.max(0, n)))
@@ -154,25 +153,22 @@ final class EmailEtlApi(
       // key joins the store lookup the merge runs anyway.
       val undated = if (startDate.isEmpty) Nil else messages.filter(_.date.isEmpty).map(_.messageId)
       // The store is asked once, for the versions of these keys and the
-      // file that holds each: the rows of the batch's months (the archive
-      // months the import may touch) and, when it embeds, the backlog rows
-      // (null embedding, a body) come along with their files. The same
-      // scan counts the stored rows: with the batch's new keys, the
-      // committed total.
+      // file that holds each: when it embeds, the backlog rows (null
+      // embedding, a body) come along with their files. The same scan
+      // counts the stored rows: with the batch's new keys, the committed
+      // total.
       val storeExists = tableExists("emails")
       val live = TableSwap.liveFiles(spark, emailsPath)
       val asked = (newest(messages).map(_.messageId) ++ undated).distinct
-      val batchMonths = messages.map(_.month).distinct
-      val wanted = Seq(col("message_id").isin(asked: _*), MarkdownSink.inMonths(batchMonths)) ++
+      val wanted = col("message_id").isin(asked: _*) +:
         (if (generateEmbeddings) Seq(Backlog) else Nil)
       val stock = Observation()
       val found =
         if (!storeExists) Nil
         else emails.observe(stock, count(lit(1)).as("rows")).filter(wanted.reduce(_ || _))
-          .select(col("message_id"), col("updated_at"), MarkdownSink.monthKey(col("date")),
-            col("_metadata.file_name"), Backlog)
-          .collect().map(r => StoredRow(r.getString(0), Option(r.getTimestamp(1)), r.getInt(2),
-            r.getString(3), r.getBoolean(4))).toSeq
+          .select(col("message_id"), col("updated_at"), col("_metadata.file_name"), Backlog)
+          .collect().map(r => StoredRow(r.getString(0), Option(r.getTimestamp(1)),
+            r.getString(2), r.getBoolean(3))).toSeq
       val storedRows = if (storeExists) observed(stock, "rows") else 0L
       val askedSet = asked.toSet
       val stored = found.filter(r => askedSet(r.messageId)).map(r => r.messageId -> r).toMap
@@ -193,6 +189,7 @@ final class EmailEtlApi(
         if (chosen.size == all.length) lines else only(lines, "__line", chosen.map(_.line))
       val arriving = except(incoming, "message_id", lost)
         .select(Schemas.emailSchema.fieldNames.map(col).toSeq: _*)
+      val batchRows = if (storeExists && arrivingLines.isEmpty) None else Some(arriving)
       val touched = replaced.map(_.file) ++
         (if (generateEmbeddings) found.filter(_.backlog).map(_.file) else Nil)
       // the batch's size in the store, estimated from the live files
@@ -212,44 +209,20 @@ final class EmailEtlApi(
             .withColumn("__n", row_number().over(byId))
             .filter(col("__n") === 1).drop("__n")
         }
-      // The archive months that hold an arriving or a replaced row, and the
-      // index, are rendered from the committed rows: the live rows the
-      // batch does not replace, and the batch. Neither reads an embedding,
-      // so they need not wait for the emails stage.
-      val months = (arrivingLines.map(_.month) ++ replaced.map(_.month)).distinct
-      val batchRows = if (storeExists && arrivingLines.isEmpty) None else Some(arriving)
-      def committed(files: Seq[String]): DataFrame =
-        ((if (files.isEmpty) None
-          else Some(except(readEmails(files.map(f => s"$emailsPath/$f")), "message_id", replacedKeys)))
-          ++ batchRows).reduce(_ unionByName _)
-      val archive =
-        if (!tableExists("markdown/archive")) Some(() =>
-          MarkdownSink.stageArchive(committed(live.map(_.name)), storeDir, "markdown/archive", None))
-        else if (months.isEmpty) None
-        else Some(() => MarkdownSink.stageArchive(committed(
-            // every stored row of a batch month came with the lookup; a
-            // replaced row's month outside them may be in any live file
-            if (months.forall(batchMonths.contains)) found.filter(r => months.contains(r.month)).map(_.file).distinct
-            else live.map(_.name)),
-          storeDir, "markdown/archive", Some(months)))
-      val index =
-        if (batchRows.isEmpty && tableExists("markdown/index")) None
-        else Some(() => MarkdownSink.stageIndex(committed(live.map(_.name)), storeDir, "markdown/index"))
       // The tables are staged at once, each query on a thread of its own:
       // a sync is a handful of small jobs, and one after another they
       // leave the cores idle while the driver plans and commits each.
       var emailsChange: Option[EmailsChange] = None
-      val changes = together(Seq(
+      val changes = together(
         () => {
           emailsChange = stageEmails(live, touched.toSet, replacedKeys, batchRows,
             arrivingBytes, generateEmbeddings)
-          emailsChange.map(_.change).toSeq
+          emailsChange.map(_.change)
         },
-        () => Seq(TableSwap.change(spark, storeDir, "attachments",
-          TableSwap.stage(allAtts, storeDir, "attachments"), Seq(""))),
-        () => Seq(TableSwap.change(spark, storeDir, "audit",
-          TableSwap.stage(Normalize.auditRows(incoming, "imported"), storeDir, "audit"), Nil))) ++
-        (archive ++ index).map(stage => () => Seq(stage())): _*)
+        () => Some(TableSwap.change(spark, storeDir, "attachments",
+          TableSwap.stage(allAtts, storeDir, "attachments"), replace = true)),
+        () => Some(TableSwap.change(spark, storeDir, "audit",
+          TableSwap.stage(Normalize.auditRows(incoming, "imported"), storeDir, "audit"), replace = false)))
       TableSwap.swap(spark, storeDir, changes.flatten)
 
       Map(
@@ -473,7 +446,6 @@ final class EmailEtlApi(
   /** Per-provider stats (reference: src/database.py:333-343). */
   def providerStats(): DataFrame = search.byProviderStats
 
-  /** `estimate-cost` (reference: main.py:435-446, src/embeddings.py:191-203). */
   /** CLI `providers` (reference: main.py:44-69 via
     * src/providers/__init__.py:94 list_providers + database.get_providers):
     * the registered provider catalog — enabled/default flags from the same
@@ -511,12 +483,6 @@ final class EmailEtlApi(
       .orderBy(col("provider"))
   }
 
-  private def storeLayout: Seq[(String, org.apache.spark.sql.types.StructType)] =
-    Seq(
-      "emails" -> Schemas.emailSchema,
-      "attachments" -> Schemas.attachmentSchema,
-      "audit" -> Schemas.auditSchema)
-
   private def tableExists(name: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(s"$storeDir/$name")
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
@@ -530,7 +496,7 @@ final class EmailEtlApi(
     * per table: (table, status ∈ created|ok|schema_mismatch, rows). */
   def dbInit(): DataFrame = {
     import spark.implicits._
-    storeLayout.map { case (name, schema) =>
+    EmailEtlApi.Layout.map { case (name, schema) =>
       val path = s"$storeDir/$name"
       if (!tableExists(name)) {
         spark.createDataFrame(
@@ -571,7 +537,7 @@ final class EmailEtlApi(
     * first query). Returns (table, exists, readable, rows). */
   def dbTest(): DataFrame = {
     import spark.implicits._
-    storeLayout.map { case (name, _) =>
+    EmailEtlApi.Layout.map { case (name, _) =>
       val exists = tableExists(name)
       val (readable, rows) =
         if (!exists) (false, -1L)
@@ -585,15 +551,13 @@ final class EmailEtlApi(
     }.toDF("table", "exists", "readable", "rows")
   }
 
-  def estimateCost(): Double = {
-    val row = search.embeddingBacklog()
+  /** `estimate-cost` (reference: main.py:435-446, src/embeddings.py:191-203). */
+  def estimateCost(): Double =
+    search.embeddingBacklog()
       .select(graft.functions.EmailFunctions.approxTokenCount(
         coalesce(col("body_markdown"), col("body_plain"))).as("t"))
-      .agg(count(lit(1)), avg(col("t"))).collect()(0)
-    val n = row.getLong(0)
-    val avgTokens = if (row.isNullAt(1)) 0.0 else row.getDouble(1)
-    n.toDouble * avgTokens / 1e6 * 0.02
-  }
+      .agg(graft.functions.EmailFunctions.costEstimate(count(lit(1)), coalesce(avg(col("t")), lit(0.0))))
+      .collect()(0).getDouble(0)
 
   /** `url screen` (beyond-reference surface; VERDICT r12 #6): the URL
     * family's front door for a USER-supplied batch — canonicalize each
@@ -683,8 +647,15 @@ final class EmailEtlApi(
 }
 
 object EmailEtlApi {
+  /** The store's tables, as paths under the store directory, with their
+    * declared schemas. */
+  val Layout: Seq[(String, org.apache.spark.sql.types.StructType)] = Seq(
+    "emails" -> Schemas.emailSchema,
+    "attachments" -> Schemas.attachmentSchema,
+    "audit" -> Schemas.auditSchema)
+
   /** The store's tables, as paths under the store directory. */
-  val Tables: Seq[String] = Seq("emails", "attachments", "audit", "markdown/archive", "markdown/index")
+  val Tables: Seq[String] = Layout.map(_._1)
 }
 
 /** Thin CLI front-end mirroring the reference verbs (reference: main.py). */

@@ -70,18 +70,15 @@ object TableSwap {
   }
 
   /** A change that moves what [[stage]] wrote for `table` (under `root`)
-    * into it under the same names, replacing the live files whose path
-    * starts with one of `replacing` (`""` is every file, none appends).
-    * A missing table is created from its stage directory. */
+    * into it under the same names, replacing every live file when
+    * `replace` and none (an append) otherwise. A missing table is created
+    * from its stage directory. */
   def change(spark: SparkSession, root: String, table: String, staged: Seq[String],
-      replacing: Seq[String]): Change = {
+      replace: Boolean): Change = {
     val live = new Path(root, table)
     val fs0 = fs(spark, root)
     if (!fs0.exists(live)) Change(table, Nil, Nil, create = true)
-    else Change(table, staged.map(f => f -> f), replacing.flatMap { p =>
-      val dir = if (p.isEmpty) live else new Path(live, p)
-      dataFiles(fs0, dir).map { case (f, _) => if (p.isEmpty) f else s"${p.stripSuffix("/")}/$f" }
-    })
+    else Change(table, staged.map(f => f -> f), if (replace) dataFiles(fs0, live).map(_._1) else Nil)
   }
 
   /** Commits `changes` (tables under `root`) as one swap. */

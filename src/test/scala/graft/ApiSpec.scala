@@ -214,10 +214,12 @@ class ApiSpec extends SparkSpec {
     write(inbox, "day1.json", Seq(msg("p1", "Fri, 01 Mar 2024 10:00:00 +0000", "scan",
       plain = Some("the scan is attached"), atts = Seq(Att("scan.png", safe = true)))))
     graft.api.Cli.run(spark, List("import", "sync", inbox, store))
-    Seq("emails", "attachments", "audit", "markdown/archive", "markdown/index").foreach(t =>
-      assert(new java.io.File(s"$store/$t").isDirectory, s"$t missing"))
+    val tables = new java.io.File(store).list().filterNot(_.startsWith(".")).sorted.toSeq
+    assert(tables == Seq("attachments", "audit", "emails"), tables.mkString(", "))
     val emails = new EmailEtlApi(spark, store).emails
     assert(emails.count() == 1 && emails.filter("embedding IS NULL").count() == 0)
+    val archived = graft.sinks.MarkdownSink.archive(emails).collect()
+    assert(archived.map(_.getAs[String]("message_id")).toSeq == Seq("p1"))
   }
 
   test("url screen: canonicalization, gate verdicts, within-batch keep-first dedup, bounds") {

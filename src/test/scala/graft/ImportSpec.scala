@@ -1,7 +1,8 @@
 package graft
 
 import graft.api.EmailEtlApi
-import org.apache.spark.sql.DataFrame
+import graft.sinks.MarkdownSink
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Raw-message lines for import fixtures (FIXTURES.md §1 shape): a
@@ -46,6 +47,23 @@ object ImportFixture {
   def write(dir: String, file: String, lines: Seq[String]): Unit =
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, file),
       lines.mkString("\n").getBytes("UTF-8"))
+
+  /** Order-insensitive table hash: row count and the wrapping sum of each
+    * row's `xxhash64` over its JSON form, columns in name order. */
+  def tableHash(df: DataFrame): String = {
+    val hs = df.select(xxhash64(to_json(struct(df.columns.sorted.map(col).toSeq: _*))))
+      .collect().map(_.getLong(0))
+    s"${hs.length}:${hs.sum}"
+  }
+
+  /** Every table of the store under `store`, read from its files, then
+    * the markdown archive and index, projected from its `emails`. */
+  def storeTables(spark: SparkSession, store: String): Seq[(String, DataFrame)] = {
+    val emails = new EmailEtlApi(spark, store).emails
+    EmailEtlApi.Tables.map(t => t -> spark.read.parquet(s"$store/$t")) ++ Seq(
+      "markdown/archive" -> MarkdownSink.archive(emails),
+      "markdown/index" -> MarkdownSink.index(emails))
+  }
 }
 
 /** Golden spec of the import path: `importFull`, two `syncIncremental`s,
@@ -53,7 +71,8 @@ object ImportFixture {
   * without embeddings followed by `embedBacklog()`, and a re-import over
   * stored rows of newer and of null version. Each step pins all eight
   * ImportStatus counters and an order-insensitive hash of every table the
-  * import writes. */
+  * import writes and of the markdown archive and index projected from
+  * `emails`. */
 class ImportSpec extends SparkSpec {
   import ImportFixture._
 
@@ -89,23 +108,13 @@ class ImportSpec extends SparkSpec {
       plain = Some("draft roadmap for the quarter"),
       atts = Seq(Att("chart.png", safe = true), Att("tool.exe", safe = false))))
 
-  /** Order-insensitive table hash: row count and the wrapping sum of each
-    * row's `xxhash64` over its JSON form, columns in name order. */
-  private def tableHash(df: DataFrame): String = {
-    val hs = df.select(xxhash64(to_json(struct(df.columns.sorted.map(col).toSeq: _*))))
-      .collect().map(_.getLong(0))
-    s"${hs.length}:${hs.sum}"
-  }
-
-  private val tables = Seq("emails", "attachments", "audit", "markdown/archive", "markdown/index")
-
   /** One step: its counters in a fixed key order, then each table's hash. */
   private def record(step: String, stats: Map[String, Long], store: String): Seq[(String, String)] = {
     val keys = Seq("total_found", "processed", "skipped", "failed",
       "attachments_processed", "attachments_rejected", "embedded", "total")
     assert(stats.keySet == keys.toSet, s"$step: ImportStatus keys ${stats.keySet}")
     (s"$step status" -> keys.map(k => s"$k=${stats(k)}").mkString(" ")) +:
-      tables.map(t => s"$step $t" -> tableHash(spark.read.parquet(s"$store/$t")))
+      storeTables(spark, store).map { case (t, df) => s"$step $t" -> tableHash(df) }
   }
 
   private def check(got: Seq[(String, String)], want: Seq[(String, String)]): Unit = {
@@ -141,7 +150,7 @@ class ImportSpec extends SparkSpec {
       generateEmbeddings = false), store)
     val embedded = api.embedBacklog()
     val after = Seq("embedBacklog" -> embedded.toString) ++
-      tables.map(t => s"backlog $t" -> tableHash(spark.read.parquet(s"$store/$t")))
+      storeTables(spark, store).map { case (t, df) => s"backlog $t" -> tableHash(df) }
     check(capped ++ after, Golden.capped)
   }
 

@@ -1,8 +1,8 @@
 package graft
 
 import graft.api.EmailEtlApi
+import graft.sinks.MarkdownSink
 import graft.store.TableSwap
-import org.apache.spark.sql.functions._
 
 /** The store's file-set swap under faults, and the file layout of
   * `emails` that copy-on-write syncs leave behind. */
@@ -19,14 +19,10 @@ class TableSwapSpec extends SparkSpec {
       atts = if (i % 2 == 0) Seq(Att(s"f$d$i.png", safe = true)) else Nil)
   }
 
-  /** Order-insensitive hash of every store table: row count and the sum
-    * of each row's `xxhash64` over its JSON form, columns in name order. */
-  private def hashes(store: String): Seq[String] = EmailEtlApi.Tables.map { t =>
-    val df = spark.read.parquet(s"$store/$t")
-    val hs = df.select(xxhash64(to_json(struct(df.columns.sorted.map(col).toSeq: _*))))
-      .collect().map(_.getLong(0))
-    s"$t ${hs.length}:${hs.sum}"
-  }
+  /** Order-insensitive hash of every store table and of the markdown
+    * archive and index projected from `emails` ([[ImportFixture.tableHash]]). */
+  private def hashes(store: String): Seq[String] =
+    storeTables(spark, store).map { case (t, df) => s"$t ${tableHash(df)}" }
 
   private def copy(from: String): String = {
     val to = tmpDir("swap-store")
@@ -96,7 +92,7 @@ class TableSwapSpec extends SparkSpec {
     }
     val rows = api.emails.select("message_id").collect().map(_.getString(0))
     assert(rows.length == 180 && rows.distinct.length == 180)
-    assert(spark.read.parquet(s"$store/markdown/index").count() == 180)
-    assert(spark.read.parquet(s"$store/markdown/archive").count() == 180)
+    assert(MarkdownSink.index(api.emails).count() == 180)
+    assert(MarkdownSink.archive(api.emails).count() == 180)
   }
 }
