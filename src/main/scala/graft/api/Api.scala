@@ -6,7 +6,6 @@ import graft.model.Schemas
 import graft.search.{EmailSearch, SearchFilters}
 import graft.store.TableSwap
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -69,9 +68,10 @@ final class EmailEtlApi(
   private def search = new EmailSearch(emails)
 
   /** `import full` (reference: main.py:163-207, src/etl_pipeline.py:32-91):
-    * normalize, merge (A4), write attachments/audit, embed backlog (A9).
-    * The markdown archive and its index are not stored: they are
-    * projections of `emails`, rendered on read ([[graft.sinks.MarkdownSink]]).
+    * normalize, merge (A4), write audit, embed backlog (A9). The markdown
+    * archive and its index are not stored: they are projections of
+    * `emails`, rendered on read ([[graft.sinks.MarkdownSink]]); so are the
+    * attachment rows ([[attachments]]), which each email carries.
     * Parameters mirror EmailImportRequest (reference:
     * src/api/models.py:55-71): `startDate` is the `after:`
     * date filter, `maxResults` caps the listing (newest-first, like the
@@ -84,8 +84,8 @@ final class EmailEtlApi(
     *
     * One pass: the inbox is parsed and normalized once into a persisted
     * batch (the lines in range, with their attachment rows: O(batch)).
-    * Each of the three tables (`emails`, `attachments`, `audit`) is staged
-    * once and all of them are committed by one [[TableSwap]]. `emails` is
+    * Each of the two tables (`emails`, `audit`) is staged once and both
+    * are committed by one [[TableSwap]]. `emails` is
     * copy-on-write at file granularity: only the files that hold a key the
     * batch replaces or a row to embed are rewritten, the batch goes into
     * files of its own, and the backlog page is embedded in the same
@@ -102,7 +102,7 @@ final class EmailEtlApi(
     * Spark compiles each query's generated classes into one JVM-wide
     * cache, 100 classes unless the session sets
     * `spark.sql.codegen.cache.maxEntries`. A sync is a handful of
-    * queries, each planned the same way every time, and needs 63 classes;
+    * queries, each planned the same way every time, and needs 44 classes;
     * the next sync finds them there and compiles none. The cache is four
     * LRU segments of 25, though, and a class's segment follows a hash
     * that includes its class loader's identity, so it differs from JVM to
@@ -122,7 +122,7 @@ final class EmailEtlApi(
     val parsed = Observation()
     val raw = Normalize.readRaw(spark, inboxDir)
       .observe(parsed, sum(col("id").isNull.cast("long")).as("failed"))
-    val normalized = Normalize.emailsWithAttachments(raw)
+    val normalized = Normalize.emails(raw)
     // An undated line cannot be compared with the start date: it passes,
     // and the driver drops its message below if the store holds it. The
     // date is compared inside a struct because Spark writes a timestamp
@@ -174,7 +174,6 @@ final class EmailEtlApi(
       val stored = found.filter(r => askedSet(r.messageId)).map(r => r.messageId -> r).toMap
       val resident = undated.filter(stored.contains).toSet
       val chosen = newest(messages.filterNot(m => resident(m.messageId)))
-      val keys = chosen.map(_.messageId)
       // A4, in Upsert.mergeByKey's order: the greater `updated_at` wins,
       // null ranks last, and the incoming row wins a tie
       val lost = chosen.filter(m => stored.get(m.messageId).flatMap(_.updatedAt)
@@ -183,7 +182,7 @@ final class EmailEtlApi(
       val replaced = chosen.filter(m => stored.contains(m.messageId) && !lost(m.messageId))
         .map(m => stored(m.messageId))
       val arrivingLines = chosen.filterNot(m => lost(m.messageId))
-      val replacedKeys = keys.filterNot(lost)
+      val replacedKeys = arrivingLines.map(_.messageId)
 
       val incoming =
         if (chosen.size == all.length) lines else only(lines, "__line", chosen.map(_.line))
@@ -195,20 +194,6 @@ final class EmailEtlApi(
       // the batch's size in the store, estimated from the live files
       val arrivingBytes =
         if (storedRows == 0) 0L else arrivingLines.size * live.map(_.bytes).sum / storedRows
-      // attachments of every line of THIS batch's emails (email_id =
-      // surrogate of the message_id); merged with any prior table so
-      // incremental imports never drop earlier attachments
-      val batchAtts =
-        (if (chosen.size == messages.size) lines else only(lines, "message_id", keys))
-          .select(explode(col("attachments")).as("a")).select("a.*")
-      val allAtts =
-        if (!tableExists("attachments")) batchAtts
-        else {
-          val byId = Window.partitionBy(col("id")).orderBy(col("id"))
-          attachments.unionByName(batchAtts)
-            .withColumn("__n", row_number().over(byId))
-            .filter(col("__n") === 1).drop("__n")
-        }
       // The tables are staged at once, each query on a thread of its own:
       // a sync is a handful of small jobs, and one after another they
       // leave the cores idle while the driver plans and commits each.
@@ -219,8 +204,6 @@ final class EmailEtlApi(
             arrivingBytes, generateEmbeddings)
           emailsChange.map(_.change)
         },
-        () => Some(TableSwap.change(spark, storeDir, "attachments",
-          TableSwap.stage(allAtts, storeDir, "attachments"), replace = true)),
         () => Some(TableSwap.change(spark, storeDir, "audit",
           TableSwap.stage(Normalize.auditRows(incoming, "imported"), storeDir, "audit"), replace = false)))
       TableSwap.swap(spark, storeDir, changes.flatten)
@@ -425,11 +408,12 @@ final class EmailEtlApi(
   def patterns(groupBy: String, days: Int = 30): DataFrame =
     search.patterns(groupBy, days)
 
-  /** Attachment metadata table (reference: get_email_by_id MCP tool,
-    * src/api/mcp_tools.py:166-183 include_attachments), read with its
-    * declared schema like [[emails]]. */
+  /** Attachment metadata table (reference: scripts/init_db.sql:38-49; the
+    * get_email_by_id MCP tool's include_attachments,
+    * src/api/mcp_tools.py:166-183): the `attachments` rows of every stored
+    * email, one row per element of its array. */
   def attachments: DataFrame =
-    spark.read.schema(Schemas.attachmentSchema).parquet(s"$storeDir/attachments")
+    emails.select(explode(col("attachments")).as("a")).select("a.*")
 
   /** B1 point lookup by surrogate id (reference: mcp_tools.py:166-183). */
   def emailById(id: Long): DataFrame = search.byId(id)
@@ -651,7 +635,6 @@ object EmailEtlApi {
     * declared schemas. */
   val Layout: Seq[(String, org.apache.spark.sql.types.StructType)] = Seq(
     "emails" -> Schemas.emailSchema,
-    "attachments" -> Schemas.attachmentSchema,
     "audit" -> Schemas.auditSchema)
 
   /** The store's tables, as paths under the store directory. */

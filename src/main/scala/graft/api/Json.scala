@@ -14,6 +14,16 @@ private[api] object Json {
   def rows(df: DataFrame): Seq[JValue] =
     df.toJSON.collect().toSeq.map(JsonMethods.parse(_))
 
+  /** The ImportStatus shape (reference: src/api/models.py:224-233): the
+    * task's `status`, then its six counters, 0 when `s` lacks one. The MCP
+    * tools return it with status "completed", since their dispatch blocks
+    * on the ingest; the REST routes also report "running" and "failed". */
+  def importStatus(status: String, s: Map[String, Long]): JObject = JObject(
+    ("status" -> (JString(status): JValue)) ::
+      List("total_found", "processed", "failed", "skipped",
+        "attachments_processed", "attachments_rejected")
+        .map(k => k -> (JInt(BigInt(s.getOrElse(k, 0L))): JValue)))
+
   /** Lenient ISO 8601 parse: accepts offsetted ("…Z", "…+02:00") and
     * offset-less ("2024-01-15T10:00:00") datetimes — the reference's
     * FastAPI models accept both. Unparseable input raises

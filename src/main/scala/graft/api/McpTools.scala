@@ -227,14 +227,18 @@ object McpTools {
       case "extract_action_items" =>
         rows(api.extractActions(int("days", 7), int("limit", 50)))
       case "get_email_by_id" =>
+        // one plan over one row: the email, without its nested
+        // attachment rows, and those rows beside it
         val id = p("email_id").extract[Long]
-        val email = rows(api.emailById(id))
-        if (email == JArray(Nil)) throw McpError(s"email $id not found")
-        val atts =
-          if (p.get("include_attachments").flatMap(_.extractOpt[Boolean]).getOrElse(true))
-            rows(api.attachments.filter(col("email_id") === id))
-          else JArray(Nil)
-        JObject("email" -> email.asInstanceOf[JArray].arr.head, "attachments" -> atts)
+        val email = api.emailById(id)
+        val row = Json.rows(email.select(
+          struct(email.columns.filter(_ != "attachments").map(col).toSeq: _*).as("email"),
+          col("attachments"))).headOption.getOrElse(throw McpError(s"email $id not found"))
+        val atts = row \ "attachments" match {
+          case a: JArray if bool("include_attachments", d = true) => a
+          case _ => JArray(Nil)
+        }
+        JObject("email" -> row \ "email", "attachments" -> atts)
       case "get_system_status" =>
         JObject(
           "database" -> rows(api.status()).asInstanceOf[JArray].arr.headOption.getOrElse(JObject()),
@@ -256,7 +260,7 @@ object McpTools {
               "ingest is environment-excluded; same substitution as " +
               "POST /api/emails/import's inbox_dir) — or configure a " +
               "default inbox on the server"))
-        importStatusJson(api.importFull(dir,
+        Json.importStatus("completed", api.importFull(dir,
           p.get("max_results").flatMap(_.extractOpt[Int])))
       case "sync_emails" =>
         val dir = p.get("inbox_dir").flatMap(_.extractOpt[String])
@@ -264,7 +268,7 @@ object McpTools {
             "tool 'sync_emails': no inbox_dir given and no default inbox " +
               "configured on the server (the reference's parameterless form " +
               "works when the server is started with a default inbox)"))
-        importStatusJson(api.syncIncremental(dir))
+        Json.importStatus("completed", api.syncIncremental(dir))
       case "url_screen" =>
         rows(bounded(api.urlScreen(strings(p("urls"), "urls", toolName))))
       case "tokenizer_audit" =>
@@ -295,14 +299,4 @@ object McpTools {
               e.getMessage.contains("-per-call bound")) =>
         throw McpError(e.getMessage)
     }
-
-  /** The ImportStatus shape (reference: src/api/models.py:224-233), as the
-    * synchronous tools/call result — status is always "completed" here
-    * because dispatch blocks on the ingest (a thrown error becomes the
-    * tool-level McpError 400 instead of a "failed" row). */
-  private def importStatusJson(s: Map[String, Long]): JObject = JObject(
-    ("status" -> (JString("completed"): JValue)) ::
-      List("total_found", "processed", "failed", "skipped",
-        "attachments_processed", "attachments_rejected")
-        .map(k => k -> (JInt(BigInt(s.getOrElse(k, 0L))): JValue)))
 }

@@ -117,14 +117,9 @@ object RestServer {
         "providers" -> JArray(dfJson(api.providerStats()).toList))
     }
 
-    // ImportStatus shape (reference: src/api/models.py:224-233)
     val importTasks = new java.util.concurrent.ConcurrentHashMap[String, JValue]()
     val importSeq = new java.util.concurrent.atomic.AtomicLong(0)
-    def importStatus(status: String, s: Map[String, Long]): JObject = JObject(
-      ("status" -> JString(status)) ::
-        List("total_found", "processed", "failed", "skipped",
-          "attachments_processed", "attachments_rejected")
-          .map(k => k -> (JInt(BigInt(s.getOrElse(k, 0L))): JValue)))
+    import Json.importStatus
     def launchTask(prefix: String)(work: () => Map[String, Long]): JValue = {
       tasksLaunched.incrementAndGet()
       val id = s"${prefix}_${System.currentTimeMillis()}_${importSeq.incrementAndGet()}"

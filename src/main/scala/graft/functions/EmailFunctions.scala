@@ -176,12 +176,11 @@ object EmailFunctions {
 
   /** F8: urlsafe-base64 → UTF-8 text, null on undecodable input
     * (reference: provider.py:344-350, errors='ignore' ≈ null-out). */
-  def urlsafeB64Text(data: Column): Column =
-    try_to_utf8(expr_try_to_binary(translate(data, "-_", "+/")))
+  def urlsafeB64Text(data: Column): Column = urlsafeB64Bytes(data).cast("string")
 
-  private def expr_try_to_binary(c: Column): Column =
-    try_to_binary(c, lit("base64"))
-  private def try_to_utf8(b: Column): Column = b.cast("string")
+  /** Urlsafe base64 → bytes, null on undecodable input. */
+  def urlsafeB64Bytes(data: Column): Column =
+    try_to_binary(translate(data, "-_", "+/"), lit("base64"))
 
   /** F14: storage-safe base64 round trip (reference: src/security.py:231-241). */
   def toBase64(data: Column): Column = base64(data)

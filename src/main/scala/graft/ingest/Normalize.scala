@@ -61,18 +61,11 @@ object Normalize {
   def surrogateId(messageId: Column): Column = xxhash64(messageId)
 
   /** Canonical `emails` rows (minus embedding enrichment, which is a
-    * separate A9 column-upsert pass). `now` is injected for deterministic
-    * created_at/updated_at in tests. */
+    * separate A9 column-upsert pass), each with its message's canonical
+    * `attachments` rows as an array in part order. One MIME walk feeds the
+    * bodies, `has_attachments` and the attachment rows. `now` is injected
+    * for deterministic created_at/updated_at in tests. */
   def emails(raw: DataFrame, provider: String = "gmail",
-      providerAccount: String = "default",
-      now: java.sql.Timestamp = java.sql.Timestamp.from(java.time.Instant.EPOCH)): DataFrame =
-    emailsWithAttachments(raw, provider, providerAccount, now).drop("attachments")
-
-  /** [[emails]] plus `attachments`: the message's canonical attachment
-    * rows as an array. One MIME walk feeds the bodies, `has_attachments`
-    * and the attachment rows, so an import that needs both tables plans
-    * the walk once. */
-  def emailsWithAttachments(raw: DataFrame, provider: String = "gmail",
       providerAccount: String = "default",
       now: java.sql.Timestamp = java.sql.Timestamp.from(java.time.Instant.EPOCH)): DataFrame = {
     val payload = col("payload")
@@ -117,15 +110,10 @@ object Normalize {
   }
 
   /** Canonical `attachments` rows with the F16 validation report applied
-    * (reference: src/etl_pipeline.py:153-194 + src/security.py:57-110). */
+    * (reference: src/etl_pipeline.py:153-194 + src/security.py:57-110):
+    * the [[emails]] rows' `attachments` arrays, one row per element. */
   def attachments(raw: DataFrame): DataFrame =
-    raw
-      .filter(col("id").isNotNull)
-      .select(
-        col("id").as("message_id"),
-        explode(attachmentParts(mimeParts(col("payload")))).as("part"))
-      .select(attachmentRow(col("message_id"), checkedPart(col("part"))).as("a"))
-      .select("a.*")
+    emails(raw).select(explode(col("attachments")).as("a")).select("a.*")
 
   /** One message's `attachments` rows as an array, in part order, from
     * its attachment parts. Each part is checked in a lambda of its own,
@@ -135,7 +123,7 @@ object Normalize {
 
   /** An attachment part with its sanitized name and validation report. */
   private def checkedPart(p: Column): Column = {
-    val data = fromBase64(translate(p.getField("body").getField("data"), "-_", "+/"))
+    val data = urlsafeB64Bytes(p.getField("body").getField("data"))
     struct(p.as("part"), sanitizeFilename(p.getField("filename")).as("name"),
       validationReport(p.getField("filename"), p.getField("mimeType"), data).as("report"))
   }

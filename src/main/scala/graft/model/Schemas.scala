@@ -54,8 +54,25 @@ object Schemas {
   val ThreadSummaryChars = 500
   val EmbedBodyChars = 10000
 
+  /** An `attachments` row (reference: scripts/init_db.sql:38-49). Declared
+    * before [[emailSchema]], which holds these rows. */
+  val attachmentSchema: StructType = StructType(Seq(
+    StructField("id", LongType),
+    StructField("email_id", LongType),
+    StructField("filename", StringType),
+    StructField("mime_type", StringType),
+    StructField("size_bytes", LongType),
+    StructField("content_hash", StringType),
+    StructField("is_safe", BooleanType),
+    StructField("scan_results", StringType),
+    StructField("file_path", StringType)))
+
   /** `emails` table (reference: scripts/init_db.sql:14-35 +
-    * scripts/migrate_providers.sql:4-7). */
+    * scripts/migrate_providers.sql:4-7). The last field, `attachments`, is
+    * the reference's `attachments` table (scripts/init_db.sql:38-49) stored
+    * with the email it belongs to: there each row references its email
+    * (`email_id`, ON DELETE CASCADE), so here the email's rows travel
+    * with it through every rewrite and can never disagree with it. */
   val emailSchema: StructType = StructType(Seq(
     StructField("id", LongType),
     StructField("message_id", StringType, nullable = false),
@@ -82,19 +99,8 @@ object Schemas {
     StructField("provider", StringType),
     StructField("provider_account", StringType),
     StructField("created_at", TimestampType),
-    StructField("updated_at", TimestampType)))
-
-  /** `attachments` table (reference: scripts/init_db.sql:38-49). */
-  val attachmentSchema: StructType = StructType(Seq(
-    StructField("id", LongType),
-    StructField("email_id", LongType),
-    StructField("filename", StringType),
-    StructField("mime_type", StringType),
-    StructField("size_bytes", LongType),
-    StructField("content_hash", StringType),
-    StructField("is_safe", BooleanType),
-    StructField("scan_results", StringType),
-    StructField("file_path", StringType)))
+    StructField("updated_at", TimestampType),
+    StructField("attachments", ArrayType(attachmentSchema))))
 
   /** `email_audit_log` table (reference: scripts/init_db.sql:86-92). */
   val auditSchema: StructType = StructType(Seq(

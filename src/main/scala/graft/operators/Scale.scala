@@ -1,18 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Scale primitives: skew-safe joins and bucketed co-located storage.
+/** Scale primitives: skew-safe joins and z-order layout.
   *
   * These are the knobs SURVEY §4 calls out for the 100 TB posture: a
   * heavily-skewed join key (one sender with millions of emails, one
   * shingle shared by every document) turns a shuffle join into a single
   * straggler task; salting fans the hot key across `saltFactor`
-  * partitions. Bucketed tables co-locate both sides of a recurring join
-  * key at write time so steady-state joins skip the exchange entirely.
-  * AQE's skew-join handling covers the adaptive case; explicit salting
-  * covers deterministic pipelines and pre-AQE engines.
+  * partitions. AQE's skew-join handling covers the adaptive case;
+  * explicit salting covers deterministic pipelines and pre-AQE engines.
   */
 object Scale {
 
@@ -31,46 +29,6 @@ object Scale {
     val fanned = right.withColumn("__salt",
       explode(sequence(lit(0L), lit(saltFactor.toLong - 1))))
     salted.join(fanned, Seq(key, "__salt")).drop("__salt")
-  }
-
-  /** Write a table bucketed + sorted by `key` into the session catalog so
-    * subsequent equi-joins between co-bucketed tables plan with zero
-    * shuffle (SortMergeJoin over pre-sorted buckets, no Exchange). */
-  def writeBucketed(
-      df: DataFrame,
-      tableName: String,
-      key: String,
-      buckets: Int): Unit =
-    df.write
-      .mode("overwrite")
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .format("parquet")
-      .saveAsTable(tableName)
-
-  /** Columnar write with zstd + dictionary encoding — at 100 TB the
-    * storage/scan-bandwidth difference vs default snappy is material
-    * (typically ~25-40% smaller for text-heavy columns). */
-  def writeCompressed(df: DataFrame, path: String,
-      codec: String = "zstd"): Unit =
-    df.write.mode("overwrite")
-      .option("compression", codec)
-      .parquet(path)
-
-  /** Repartition so each output partition targets `targetBytes` of input
-    * data, using Catalyst's size estimate. Keeps shuffle/file sizes inside
-    * executor-memory and HDFS-block sweet spots regardless of scale
-    * factor — the knob SURVEY §4 ties to
-    * `spark.sql.files.maxPartitionBytes`. */
-  def repartitionForSize(df: DataFrame, targetBytes: Long = 128L * 1024 * 1024): DataFrame = {
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    // stats can be absent (defaultSizeInBytes ≈ Long.MaxValue) or a join
-    // product far beyond Int range — clamp in BigInt space BEFORE toInt,
-    // which would otherwise keep only the low 32 bits and produce an
-    // arbitrary (possibly tiny) partition count
-    val needed = (bytes + targetBytes - 1) / BigInt(targetBytes)
-    val parts = needed.max(BigInt(1)).min(BigInt(200000)).toInt
-    df.repartition(parts)
   }
 
   /** 32-bit Morton (z-order) interleave of two 16-bit non-negative

@@ -107,7 +107,7 @@ class ApiSpec extends SparkSpec {
     val a = new EmailEtlApi(spark, fresh)
     val first = a.dbInit().collect().map(r =>
       (r.getString(0), r.getString(1), r.getLong(2))).toSeq
-    assert(first.map(_._1).sorted == Seq("attachments", "audit", "emails"))
+    assert(first.map(_._1).sorted == Seq("audit", "emails"))
     assert(first.forall(_._2 == "created"))
     // created tables are readable empty frames with the declared columns
     assert(spark.read.parquet(s"$fresh/emails").columns.contains("message_id"))
@@ -174,10 +174,10 @@ class ApiSpec extends SparkSpec {
         atts = Seq(Att("invoice.png", safe = true)))))
     val a = new EmailEtlApi(spark, store)
     a.importFull(day1)
-    val tables = Seq("emails", "attachments")
+    val tables = Seq("emails")
     def rows(t: String): Set[String] = spark.read.parquet(s"$store/$t").toJSON.collect().toSet
     val before = tables.map(rows)
-    assert(before.map(_.size) == Seq(2, 3))
+    assert(before.map(_.size) == Seq(2))
     // a crash after each swap deleted its live table, before the rename
     val fs = new org.apache.hadoop.fs.Path(store).getFileSystem(spark.sessionState.newHadoopConf())
     tables.foreach(t => assert(fs.rename(new org.apache.hadoop.fs.Path(s"$store/$t"),
@@ -185,7 +185,7 @@ class ApiSpec extends SparkSpec {
     a.syncIncremental(day2)
     val after = tables.map(rows)
     tables.indices.foreach(i => assert(before(i).subsetOf(after(i)), s"${tables(i)} lost rows"))
-    assert(after.map(_.size) == Seq(3, 4))
+    assert(after.map(_.size) == Seq(3))
     assert(tables.forall(t => !fs.exists(new org.apache.hadoop.fs.Path(s"$store/${t}__staging"))))
   }
 
@@ -215,7 +215,7 @@ class ApiSpec extends SparkSpec {
       plain = Some("the scan is attached"), atts = Seq(Att("scan.png", safe = true)))))
     graft.api.Cli.run(spark, List("import", "sync", inbox, store))
     val tables = new java.io.File(store).list().filterNot(_.startsWith(".")).sorted.toSeq
-    assert(tables == Seq("attachments", "audit", "emails"), tables.mkString(", "))
+    assert(tables == Seq("audit", "emails"), tables.mkString(", "))
     val emails = new EmailEtlApi(spark, store).emails
     assert(emails.count() == 1 && emails.filter("embedding IS NULL").count() == 0)
     val archived = graft.sinks.MarkdownSink.archive(emails).collect()

@@ -1,6 +1,7 @@
 package graft
 
 import graft.api.EmailEtlApi
+import graft.ingest.Normalize
 import graft.sinks.MarkdownSink
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -56,13 +57,18 @@ object ImportFixture {
     s"${hs.length}:${hs.sum}"
   }
 
-  /** Every table of the store under `store`, read from its files, then
-    * the markdown archive and index, projected from its `emails`. */
+  /** Every table of the store under `store` and every projection of its
+    * `emails`: `emails` without its nested attachment rows, those rows
+    * ([[EmailEtlApi.attachments]]), `audit` as its files hold it, and the
+    * markdown archive and index. */
   def storeTables(spark: SparkSession, store: String): Seq[(String, DataFrame)] = {
-    val emails = new EmailEtlApi(spark, store).emails
-    EmailEtlApi.Tables.map(t => t -> spark.read.parquet(s"$store/$t")) ++ Seq(
-      "markdown/archive" -> MarkdownSink.archive(emails),
-      "markdown/index" -> MarkdownSink.index(emails))
+    val api = new EmailEtlApi(spark, store)
+    Seq(
+      "emails" -> api.emails.drop("attachments"),
+      "attachments" -> api.attachments,
+      "audit" -> spark.read.parquet(s"$store/audit"),
+      "markdown/archive" -> MarkdownSink.archive(api.emails),
+      "markdown/index" -> MarkdownSink.index(api.emails))
   }
 }
 
@@ -71,8 +77,10 @@ object ImportFixture {
   * without embeddings followed by `embedBacklog()`, and a re-import over
   * stored rows of newer and of null version. Each step pins all eight
   * ImportStatus counters and an order-insensitive hash of every table the
-  * import writes and of the markdown archive and index projected from
-  * `emails`. */
+  * import writes and of the attachment rows, markdown archive and index
+  * projected from `emails`; after each, the attachment rows have unique
+  * ids and each belongs to a stored email. A last case re-imports a
+  * message whose new version drops an attachment. */
 class ImportSpec extends SparkSpec {
   import ImportFixture._
 
@@ -113,8 +121,23 @@ class ImportSpec extends SparkSpec {
     val keys = Seq("total_found", "processed", "skipped", "failed",
       "attachments_processed", "attachments_rejected", "embedded", "total")
     assert(stats.keySet == keys.toSet, s"$step: ImportStatus keys ${stats.keySet}")
-    (s"$step status" -> keys.map(k => s"$k=${stats(k)}").mkString(" ")) +:
-      storeTables(spark, store).map { case (t, df) => s"$step $t" -> tableHash(df) }
+    (s"$step status" -> keys.map(k => s"$k=${stats(k)}").mkString(" ")) +: tables(step, store)
+  }
+
+  /** Each table's hash after `step`, once its attachment rows are checked. */
+  private def tables(step: String, store: String): Seq[(String, String)] = {
+    checkAttachments(step, store)
+    storeTables(spark, store).map { case (t, df) => s"$step $t" -> tableHash(df) }
+  }
+
+  /** The store's attachment rows have unique ids, and each belongs to a
+    * stored email. */
+  private def checkAttachments(step: String, store: String): Unit = {
+    val api = new EmailEtlApi(spark, store)
+    val emailIds = api.emails.select("id").collect().map(_.getLong(0)).toSet
+    val atts = api.attachments.select("id", "email_id").collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(atts.map(_._1).distinct.length == atts.length, s"$step: duplicate attachment ids")
+    assert(atts.forall(a => emailIds(a._2)), s"$step: an attachment row without its email")
   }
 
   private def check(got: Seq[(String, String)], want: Seq[(String, String)]): Unit = {
@@ -149,8 +172,7 @@ class ImportSpec extends SparkSpec {
       startDate = Some(java.sql.Timestamp.valueOf("2024-03-02 00:00:00")),
       generateEmbeddings = false), store)
     val embedded = api.embedBacklog()
-    val after = Seq("embedBacklog" -> embedded.toString) ++
-      storeTables(spark, store).map { case (t, df) => s"backlog $t" -> tableHash(df) }
+    val after = Seq("embedBacklog" -> embedded.toString) ++ tables("backlog", store)
     check(capped ++ after, Golden.capped)
   }
 
@@ -160,6 +182,7 @@ class ImportSpec extends SparkSpec {
     val api = new EmailEtlApi(spark, store)
     write(inbox, "day1.json", day1)
     api.importFull(inbox)
+    checkAttachments("import", store)
     val bumped = spark.read.parquet(s"$store/emails")
       .withColumn("updated_at",
         when(col("message_id") === "a2", lit(java.sql.Timestamp.valueOf("2030-01-01 00:00:00")))
@@ -172,6 +195,46 @@ class ImportSpec extends SparkSpec {
     check(record("again", api.importFull(inbox), store), Golden.versions)
   }
 
+  test("re-import: a new version that drops an attachment leaves only its own rows") {
+    val v1 = tmpDir("import-drop-v1")
+    val v2 = tmpDir("import-drop-v2")
+    val store = tmpDir("import-drop-store")
+    val api = new EmailEtlApi(spark, store)
+    write(v1, "v1.json", Seq(
+      msg("d1", "Fri, 01 Mar 2024 10:00:00 +0000", "plans", plain = Some("two files"),
+        atts = Seq(Att("plan.png", safe = true), Att("run.exe", safe = false))),
+      msg("d2", "Sat, 02 Mar 2024 10:00:00 +0000", "photo", plain = Some("one file"),
+        atts = Seq(Att("keep.png", safe = true)))))
+    write(v2, "v2.json", Seq(
+      msg("d1", "Fri, 01 Mar 2024 10:00:00 +0000", "plans", plain = Some("one file now"),
+        atts = Seq(Att("plan.png", safe = true)))))
+    api.importFull(v1)
+    checkAttachments("v1", store)
+    val stats = api.importFull(v2)
+    checkAttachments("v2", store)
+    assert((stats("total_found"), stats("skipped"), stats("total")) == ((1L, 1L, 2L)), s"$stats")
+    def rows(df: DataFrame): Set[String] = df.toJSON.collect().toSet
+    val d1 = api.attachments.filter(col("file_path").startsWith("d1/"))
+    assert(rows(d1) == rows(Normalize.attachments(Normalize.readRaw(spark, v2))))
+    assert(api.attachments.select("file_path").collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("d1/plan.png", "d2/keep.png"))
+  }
+
+  test("an attachment whose data does not decode is imported without a size or hash") {
+    val inbox = tmpDir("import-b64-inbox")
+    val api = new EmailEtlApi(spark, tmpDir("import-b64-store"))
+    // "abcde" leaves one base64 character over, which unbase64 rejects
+    val line = msg("x1", "Fri, 01 Mar 2024 10:00:00 +0000", "scan", plain = Some("see attached"),
+      atts = Seq(Att("a.exe", safe = false)))
+      .replaceAll(""""data":"[^"]*","size":9""", """"data":"!!abcde","size":9""")
+    write(inbox, "x.json", Seq(line))
+    assert(api.importFull(inbox)("processed") == 1L)
+    val rows = api.attachments.collect().toSeq
+    assert(rows.map(_.getAs[String]("filename")) == Seq("a.exe.txt"))
+    assert(rows.head.isNullAt(rows.head.fieldIndex("size_bytes")) &&
+      rows.head.isNullAt(rows.head.fieldIndex("content_hash")))
+  }
+
   /** Counters and hashes as the import gave them before it became one
     * pass, with two counts fixed:
     *  - `failed` counts the line cut off after its `"id"` (`cut1`), which
@@ -180,13 +243,16 @@ class ImportSpec extends SparkSpec {
     *    a duplicate line (`a4`, `b1`) and a message reported as skipped
     *    (the re-read boundary message of a sync, every message of the
     *    re-import) add nothing.
-    * The tables are unchanged, including the duplicate attachment rows a
-    * duplicate line leaves in a table written for the first time. */
+    * The tables are unchanged but for the attachment rows, which are now
+    * the stored emails' own: a duplicate line adds none, so the rows a
+    * duplicate line left in a table written for the first time are gone
+    * (`import attachments` 5 → 4 rows, `a4`'s twice; `capped` and
+    * `backlog attachments` 6 → 4 rows, `a4`'s and `b1`'s twice). */
   private object Golden {
     val incremental: Seq[(String, String)] = Seq(
       "import status" -> "total_found=5 processed=5 skipped=0 failed=2 attachments_processed=3 attachments_rejected=1 embedded=4 total=5",
       "import emails" -> "5:-852426676261443018",
-      "import attachments" -> "5:1808285860827878331",
+      "import attachments" -> "4:-7630052450980914965",
       "import audit" -> "5:2588998793859516006",
       "import markdown/archive" -> "5:-2679912517035318161",
       "import markdown/index" -> "5:1148333043699649407",
@@ -218,13 +284,13 @@ class ImportSpec extends SparkSpec {
     val capped: Seq[(String, String)] = Seq(
       "capped status" -> "total_found=4 processed=4 skipped=0 failed=3 attachments_processed=2 attachments_rejected=2 embedded=0 total=4",
       "capped emails" -> "4:835798231161302933",
-      "capped attachments" -> "6:-4962825405667984999",
+      "capped attachments" -> "4:-7905132578813627037",
       "capped audit" -> "4:7202241805845644099",
       "capped markdown/archive" -> "4:3013817379199745865",
       "capped markdown/index" -> "4:-7424295579368055323",
       "embedBacklog" -> "4",
       "backlog emails" -> "4:5583526941171540820",
-      "backlog attachments" -> "6:-4962825405667984999",
+      "backlog attachments" -> "4:-7905132578813627037",
       "backlog audit" -> "4:7202241805845644099",
       "backlog markdown/archive" -> "4:3013817379199745865",
       "backlog markdown/index" -> "4:-7424295579368055323")

@@ -149,7 +149,7 @@ class NormalizeSpec extends SparkSpec {
     // Every later query of an import carries this plan (it is the cached
     // batch), so a walk that re-embeds its tree per use is paid many
     // times over; the Column-form MIME walk made it 5,360 nodes.
-    val nodes = exprNodes(Normalize.emailsWithAttachments(Normalize.readRaw(spark, fixtureDir))
+    val nodes = exprNodes(Normalize.emails(Normalize.readRaw(spark, fixtureDir))
       .queryExecution.analyzed)
     assert(nodes <= 2000, s"analyzed plan has $nodes expression nodes")
   }

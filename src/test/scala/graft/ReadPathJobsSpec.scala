@@ -6,8 +6,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * an inferred schema runs a footer-inference job each time it is built,
   * and a route that reads the store again after its search runs a second
   * plan; on a store this small those fixed costs are most of a request.
-  * Every search route is one plan and so one job; `ask` and the lookup
-  * read at most two plans. */
+  * Every search route is one plan and so one job, and so is the lookup,
+  * which reads the email and its attachment rows from one row; `ask`
+  * reads at most two plans. */
 class ReadPathJobsSpec extends ReadFixture {
   private val request = ReadRoutesGoldenSpec.requests.map { case (n, p, b) => n -> (p, b) }.toMap
 
@@ -55,8 +56,8 @@ class ReadPathJobsSpec extends ReadFixture {
     }
   }
 
-  test("MCP get_email_by_id runs at most 2 jobs") {
+  test("MCP get_email_by_id runs at most 1 job") {
     val n = jobsOf("mcp_lookup")
-    assert(n <= 2, s"get_email_by_id ran $n jobs")
+    assert(n <= 1, s"get_email_by_id ran $n jobs")
   }
 }

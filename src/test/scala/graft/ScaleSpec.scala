@@ -8,13 +8,6 @@ import org.apache.spark.sql.functions._
 class ScaleSpec extends SparkSpec {
   import spark.implicits._
 
-  /** True if the physical plan of `df` contains a shuffle exchange. */
-  private def hasShuffleExchange(df: org.apache.spark.sql.DataFrame): Boolean =
-    df.queryExecution.executedPlan.exists {
-      case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => true
-      case _ => false
-    }
-
   test("salted join == plain join, hot key fanned out") {
     val left = (1 to 2000).map(i => (if (i % 10 == 0) "hot" else s"k$i", i))
       .toDF("key", "v")
@@ -25,26 +18,6 @@ class ScaleSpec extends SparkSpec {
       .select("key", "v", "tag").collect().toSet
     assert(salted == plain)
     assert(plain.count(_.getString(0) == "hot") == 200)
-  }
-
-  test("co-bucketed tables join without a shuffle exchange") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val a = (1 to 5000).map(i => (i.toLong, s"a$i")).toDF("id", "va")
-      val b = (1 to 5000).map(i => (i.toLong, s"b$i")).toDF("id", "vb")
-      Scale.writeBucketed(a, "bucketed_a", "id", buckets = 8)
-      Scale.writeBucketed(b, "bucketed_b", "id", buckets = 8)
-      val joined = spark.table("bucketed_a")
-        .join(spark.table("bucketed_b"), Seq("id"))
-      assert(!hasShuffleExchange(joined),
-        "bucketed join should plan without shuffle:\n" +
-          joined.queryExecution.executedPlan.toString)
-      assert(joined.count() == 5000)
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql("DROP TABLE IF EXISTS bucketed_a")
-      spark.sql("DROP TABLE IF EXISTS bucketed_b")
-    }
   }
 
   test("connected components: 60k-node graph with a 512-node chain converges in O(log d) rounds") {
@@ -74,26 +47,6 @@ class ScaleSpec extends SparkSpec {
     (0L to 511L).foreach(v => assert(labels(v) == 0L))
     assert(labels.size == 512 + 3 * 20000)
     assert(labels(1000L + 42 * 3 + 2) == 1000L + 42 * 3)
-  }
-
-  test("zstd write is smaller than uncompressed for text columns") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val base = tmpDir("compress")
-    Scale.writeCompressed(docs, s"$base/zstd", "zstd")
-    Scale.writeCompressed(docs, s"$base/none", "none")
-    def dirSize(p: String): Long =
-      new java.io.File(p).listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(_.length()).sum
-    assert(dirSize(s"$base/zstd") < dirSize(s"$base/none"))
-    assert(spark.read.parquet(s"$base/zstd").count() == docs.count())
-  }
-
-  test("repartitionForSize yields size-proportional partition counts") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val small = Scale.repartitionForSize(docs, targetBytes = 16 * 1024)
-    val big = Scale.repartitionForSize(docs, targetBytes = 1L << 40)
-    assert(big.rdd.getNumPartitions == 1)
-    assert(small.rdd.getNumPartitions > big.rdd.getNumPartitions)
   }
 
   test("mortonZ matches a bit-by-bit scalar Morton encode") {

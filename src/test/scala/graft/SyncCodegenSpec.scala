@@ -76,7 +76,7 @@ class SyncCodegenSpec extends SparkSpec {
       s"third sync compiled $compiled classes and ran ${jobs.get} Spark jobs")
   }
 
-  test("a steady-state sync needs at most 63 generated classes") {
+  test("a steady-state sync needs at most 44 generated classes") {
     val inbox = tmpDir("codegen-ws-inbox")
     val api = new EmailEtlApi(spark, tmpDir("codegen-ws-store"))
     write(inbox, "000.json", (0 until 30).flatMap(d => day(d, 4)))
@@ -91,6 +91,6 @@ class SyncCodegenSpec extends SparkSpec {
     val classes = org.apache.spark.CodegenCache.size
     info(s"sync from an empty code cache: $classes classes cached, $compiled compilations")
     assert(stats("processed") == 15L && stats("skipped") == 1L, s"$stats")
-    assert(classes <= 63, s"a steady-state sync compiled $classes distinct classes")
+    assert(classes <= 44, s"a steady-state sync compiled $classes distinct classes")
   }
 }
