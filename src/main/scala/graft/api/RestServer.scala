@@ -54,10 +54,21 @@ import org.json4s.jackson.JsonMethods
   * (server.py:168 — the id is unreachable by clients); ours adds
   * `import_id` so the status route is actually usable.
   *
+  * Every accepted connection has Nagle's algorithm off (`TCP_NODELAY`),
+  * as in the reference's asyncio transports. The JDK server writes a
+  * reply's headers and body as two segments; with Nagle on, the body
+  * waits for the client's ACK of the headers, which a Linux client
+  * delays by about 40 ms on a kept-alive connection. The switch is the
+  * JDK's own `sun.net.httpserver.nodelay`, read once when the first
+  * `HttpServer` of the JVM is created, so [[start]] must create it: a JVM
+  * that creates another JDK `HttpServer` first keeps that one's setting.
+  *
   * Out of scope: OAuth, which is environment-excluded.
   */
 object RestServer {
   implicit private val formats: Formats = DefaultFormats
+
+  private val NoDelay = "sun.net.httpserver.nodelay"
 
   /** Start serving `api` on 127.0.0.1:`port` (port 0 = ephemeral, for
     * tests). Single-threaded executor: requests serialize, which matches
@@ -67,9 +78,13 @@ object RestServer {
     * reference's ambient OAuth session: when set (parameter or
     * GRAFT_INBOX_DIR), a reference-conformant parameterless MCP
     * `sync_emails` / empty-query `import_emails` call syncs that inbox
-    * instead of erroring (ADVICE r7 parity note). */
+    * instead of erroring (ADVICE r7 parity note).
+    *
+    * Sets `sun.net.httpserver.nodelay` to `true` first, unless the JVM was
+    * started with it (see the object's doc). */
   def start(api: EmailEtlApi, port: Int = 8000,
       defaultInboxDir: Option[String] = sys.env.get("GRAFT_INBOX_DIR")): HttpServer = {
+    if (System.getProperty(NoDelay) == null) System.setProperty(NoDelay, "true")
     val srv = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", port), 0)
 
     // Per-instance request counters behind GET /metrics. The reference

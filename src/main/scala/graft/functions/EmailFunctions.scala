@@ -182,9 +182,10 @@ object EmailFunctions {
   def urlsafeB64Bytes(data: Column): Column =
     try_to_binary(translate(data, "-_", "+/"), lit("base64"))
 
-  /** F14: storage-safe base64 round trip (reference: src/security.py:231-241). */
+  /** F14: storage-safe base64 round trip (reference: src/security.py:231-241).
+    * `fromBase64` is null on undecodable input, like [[urlsafeB64Bytes]]. */
   def toBase64(data: Column): Column = base64(data)
-  def fromBase64(s: Column): Column = unbase64(s)
+  def fromBase64(s: Column): Column = try_to_binary(s, lit("base64"))
 
   // --------------------------------------------------------------- F9 (HTML)
 

@@ -173,18 +173,17 @@ object TableSwap {
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
   /** Data files under `dir`, relative to it, with their sizes; Spark's
-    * own markers (`_*`, `.*`) are not data. */
+    * own markers (`_*`, `.*`) are not data. The walk uses `listStatus`:
+    * `listFiles` builds a `LocatedFileStatus` per file, whose permission
+    * lookup forks an `ls` on a local file system without native IO. */
   private def dataFiles(fs: FileSystem, dir: Path): Seq[(String, Long)] = {
-    if (!fs.exists(dir)) return Nil
-    val base = fs.makeQualified(dir).toUri.getPath.stripSuffix("/") + "/"
-    val it = fs.listFiles(dir, true)
-    val out = Seq.newBuilder[(String, Long)]
-    while (it.hasNext) {
-      val st = it.next()
-      val rel = st.getPath.toUri.getPath.stripPrefix(base)
-      if (!rel.split('/').exists(s => s.startsWith("_") && !s.contains("=") || s.startsWith(".")))
-        out += rel -> st.getLen
-    }
-    out.result().sortBy(_._1)
+    def walk(d: Path, prefix: String): Seq[(String, Long)] =
+      fs.listStatus(d).toSeq.flatMap { st =>
+        val name = st.getPath.getName
+        if (name.startsWith("_") && !name.contains("=") || name.startsWith(".")) Nil
+        else if (st.isDirectory) walk(st.getPath, prefix + name + "/")
+        else Seq(prefix + name -> st.getLen)
+      }
+    if (fs.exists(dir)) walk(dir, "").sortBy(_._1) else Nil
   }
 }

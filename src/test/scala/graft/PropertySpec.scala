@@ -94,6 +94,15 @@ class PropertySpec extends SparkSpec {
     got.foreach { case (in, out) => assert(in.toSeq == out.toSeq) }
   }
 
+  test("fromBase64: a remainder of one base64 character reads as null, valid input decodes") {
+    // "QUJDR" leaves one character over a whole 4-character unit, which
+    // unbase64 rejects with "Last unit does not have enough valid bits".
+    val got = Seq("QUJDR", "QUJD").toDF("s").select(fromBase64(col("s")))
+      .as[Array[Byte]].collect()
+    assert(got(0) == null)
+    assert(new String(got(1), "UTF-8") == "ABC")
+  }
+
   test("jaccard: bounded, reflexive on non-empty sets") {
     val sets = (1 to 200).map(_ =>
       (1 to (1 + rnd.nextInt(10))).map(_ => s"w${rnd.nextInt(20)}").distinct.sorted)

@@ -55,6 +55,25 @@ class RestServerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(code == 200 && (json \ "status").extract[String] == "healthy")
   }
 
+  test("replies over a kept-alive connection do not wait for a delayed ACK") {
+    // With Nagle on, the body segment waits for the client's ACK of the
+    // headers segment, which Linux delays by about 40 ms. Only a kept-alive
+    // connection shows it: TCP quick-ACKs a new connection's first
+    // segments, so `http` above, which disconnects after every request,
+    // reads about 1 ms either way.
+    import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+    val client = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+    val req = HttpRequest.newBuilder(java.net.URI.create(base + "/health")).GET().build()
+    val ms = (1 to 25).map { _ =>
+      val t0 = System.nanoTime()
+      val res = client.send(req, HttpResponse.BodyHandlers.ofString())
+      assert(res.statusCode == 200)
+      (System.nanoTime() - t0) / 1e6
+    }.drop(5).sorted
+    val median = (ms(9) + ms(10)) / 2
+    assert(median < 20.0, s"median $median ms over ${ms.mkString(", ")}")
+  }
+
   test("GET /metrics serves Prometheus exposition with live request counters") {
     http("GET", "/health") // ensure at least one counted request
     val conn = new java.net.URL(base + "/metrics").openConnection()
