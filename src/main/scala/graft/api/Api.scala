@@ -125,11 +125,10 @@ final class EmailEtlApi(
     val normalized = Normalize.emails(raw)
     // An undated line cannot be compared with the start date: it passes,
     // and the driver drops its message below if the store holds it. The
-    // date is compared inside a struct because Spark writes a timestamp
-    // constant into the generated class, and each sync would compile the
-    // batch's largest class anew; a struct constant is passed by reference.
+    // date goes in by reference (`EmailSearch.bound`), or each sync would
+    // compile the batch's largest class anew.
     val lines = startDate
-      .map(d => normalized.filter(struct(col("date")) >= struct(lit(d)) || col("date").isNull))
+      .map(d => normalized.filter(EmailSearch.bound(col("date"), _ >= _, d) || col("date").isNull))
       .getOrElse(normalized)
       .withColumn("__line", monotonically_increasing_id())
       .persist()
@@ -204,8 +203,11 @@ final class EmailEtlApi(
             arrivingBytes, generateEmbeddings)
           emailsChange.map(_.change)
         },
+        // the audit rows of a commit go into one file: an append that
+        // followed the batch's partitions would add a file per partition
         () => Some(TableSwap.change(spark, storeDir, "audit",
-          TableSwap.stage(Normalize.auditRows(incoming, "imported"), storeDir, "audit"), replace = false)))
+          TableSwap.stage(Normalize.auditRows(incoming, "imported").coalesce(1), storeDir, "audit"),
+          replace = false)))
       TableSwap.swap(spark, storeDir, changes.flatten)
 
       Map(
@@ -398,8 +400,8 @@ final class EmailEtlApi(
       now: Option[java.sql.Timestamp] = None): DataFrame = {
     val d = math.max(1, math.min(days, 90))
     val k = math.max(1, math.min(limit, 100))
-    val cutoffExpr = date_sub(now.map(lit).getOrElse(current_timestamp()), d)
-    val window = emails.filter(col("date") >= cutoffExpr)
+    val cutoff = date_sub(now.map(lit).getOrElse(current_timestamp()), d).cast("timestamp")
+    val window = emails.filter(EmailSearch.bound(col("date"), _ >= _, cutoff))
       .orderBy(col("date").desc).limit(k)
     Enrichment.extractActions(window, extractor)
   }
@@ -551,7 +553,9 @@ final class EmailEtlApi(
     * duplicates (keep-first by input position). Bounded driver boundary:
     * ≤ 10 000 URLs per call — corpus-sized screens belong to the
     * `url_canonicalize` / `url_quality_gate` / `dedup_url` batch
-    * operators and the streaming frontier screen. */
+    * operators and the streaming frontier screen. A batch this small runs
+    * in one partition: its window and sort then need no exchange, and the
+    * screen is one job of one stage. */
   def urlScreen(urls: Seq[String]): DataFrame = {
     require(urls.nonEmpty, "url screen: pass at least one URL")
     require(urls.size <= 10000,
@@ -560,7 +564,7 @@ final class EmailEtlApi(
         "corpus-sized screens")
     import spark.implicits._
     val df = urls.zipWithIndex.map { case (u, i) => (i.toLong, u) }
-      .toDF("url_id", "raw_url")
+      .toDF("url_id", "raw_url").coalesce(1)
     val parsed = df.withColumn("url",
       graft.functions.UrlParts.urlParts(col("raw_url")))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("canon_url")
@@ -587,7 +591,8 @@ final class EmailEtlApi(
     * the fixed [[graft.operators.UnigramLm.Vocab]] piece table — every
     * kernel row-local (the native [[graft.functions.UnigramViterbi]]
     * runs inside a `transform` over the word array). Bounded driver
-    * boundary: ≤ 1 000 texts per call; corpus-sized audits belong to
+    * boundary: ≤ 1 000 texts per call, run in one partition, so the sort
+    * needs no exchange; corpus-sized audits belong to
     * `unigram_fertility` / `text_token_count_bpe`. */
   def tokenizerAudit(texts: Seq[String]): DataFrame = {
     require(texts.nonEmpty, "tokenizer audit: pass at least one text")
@@ -598,7 +603,7 @@ final class EmailEtlApi(
     import spark.implicits._
     val piece = " ?[a-z]+| ?[0-9]+| ?[^a-z0-9 ]+" // text_token_count_bpe's regex
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      .toDF("text_id", "text")
+      .toDF("text_id", "text").coalesce(1)
     val withWords = df
       .withColumn("words", graft.queries.UnigramQueries.wordsCol(col("text")))
       .withColumn("vits", transform(col("words"),

@@ -1,6 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, struct, to_json}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -11,8 +12,18 @@ private[api] object Json {
   implicit private val formats: Formats = DefaultFormats
 
   /** DataFrame rows as json4s values via Spark's own JSON encoder. */
-  def rows(df: DataFrame): Seq[JValue] =
-    df.toJSON.collect().toSeq.map(JsonMethods.parse(_))
+  def rows(df: DataFrame): Seq[JValue] = lines(df).map(JsonMethods.parse(_))
+
+  /** Each row of `df` as one JSON object, in order: what `Dataset.toJSON`
+    * writes, byte for byte (`JsonRowsSpec`), from the same encoder. The
+    * encoder runs as a `to_json(struct(<every column>))` projection inside
+    * the query, where `toJSON` maps the rows the query returns. A ranked
+    * query's `orderBy.limit` then stays the root of its plan and runs as
+    * one `TakeOrderedAndProjectExec`, whose per-partition top-k the driver
+    * merges; under `toJSON` it would be a shuffle and a second stage. */
+  private[api] def lines(df: DataFrame): Seq[String] =
+    df.select(to_json(struct(df.columns.map(c => col(s"`${c.replace("`", "``")}`")).toSeq: _*)))
+      .collect().map(_.getString(0)).toSeq
 
   /** The ImportStatus shape (reference: src/api/models.py:224-233): the
     * task's `status`, then its six counters, 0 when `s` lacks one. The MCP

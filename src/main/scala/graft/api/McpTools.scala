@@ -194,7 +194,10 @@ object McpTools {
     }.toMap
 
   /** Execute one tool call against the engine. Row payloads serialize via
-    * Spark's toJSON, as in [[RestServer]]. */
+    * [[Json.rows]], as in [[RestServer]]: a `to_json` projection inside the
+    * tool's query, so a ranked search adds no stage for it, and the
+    * request's values (`email_id`, a date window) go to the generated code
+    * by reference, so a new value compiles no class. */
   def dispatch(api: EmailEtlApi, toolName: String, params: JValue,
       defaultInboxDir: Option[String] = None): JValue = {
     val tool = tools.find(_.name == toolName)

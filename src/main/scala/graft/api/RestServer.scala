@@ -16,10 +16,16 @@ import org.json4s.jackson.JsonMethods
   * contract. The server is a transport only: every route body is one
   * [[EmailEtlApi]] call (itself one Catalyst plan + the documented ≤20-row
   * driver boundary) per result it returns — `/api/status` and MCP
-  * `get_email_by_id` return two — and `DataFrame → JSON` uses Spark's own
-  * `toJSON` so row serialization stays in the engine. A route never reads
+  * `get_email_by_id` return two. `DataFrame → JSON` is [[Json.rows]]:
+  * Spark's own JSON encoder, as a `to_json` projection inside the call's
+  * query, so row serialization stays in the engine and adds no stage (a
+  * ranked search stays one `TakeOrderedAndProjectExec`, where `toJSON`
+  * would add a shuffle). A request's values (an id, a date window) reach
+  * the generated code by reference ([[graft.search.EmailSearch.bound]]),
+  * so a warm route compiles nothing for a new one. A route never reads
   * the store again to decorate a call's rows: a column it needs is asked
-  * of the call's own plan (`ReadPathJobsSpec` counts the jobs).
+  * of the call's own plan (`ReadPathJobsSpec` counts the jobs, stages
+  * and compilations).
   *
   * Routes mirrored (names, defaults, clamps follow the reference):
   *  - GET  /health                 → {"status": "healthy"}

@@ -81,14 +81,20 @@ object TextFunctions {
     * rank = (Σ_t tf_t/(tf_t+1)) / nTerms ∈ [0,1). Damping shape follows
     * Postgres ts_rank's diminishing-returns curve (reference:
     * scripts/init_db.sql:120-127) but uses division instead of log so the
-    * value is exactly reproducible in any IEEE-754 engine. */
+    * value is exactly reproducible in any IEEE-754 engine.
+    *
+    * The terms are one array constant and the whole rank is one
+    * higher-order function, which the generated code reaches by
+    * reference: a query with other terms, or more of them, needs no new
+    * class. Each term's frequency is counted once. */
   def tfRank(toks: Column, terms: Seq[String]): Column = {
     require(terms.nonEmpty)
-    val parts = terms.map { t =>
-      val tf = size(filter(toks, x => x === lit(t))).cast("double")
-      tf / (tf + lit(1.0))
-    }
-    parts.reduce(_ + _) / lit(terms.length.toDouble)
+    val queryTerms = typedlit(terms)
+    aggregate(
+      transform(queryTerms, t => size(filter(toks, x => x === t)).cast("double")),
+      lit(0.0),
+      (sum, tf) => sum + tf / (tf + lit(1.0)),
+      sum => sum / size(queryTerms).cast("double"))
   }
 
   /** Count of tokens contained in a fixed marker set (language-ID / stopword

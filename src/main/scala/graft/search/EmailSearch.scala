@@ -12,10 +12,14 @@ import org.apache.spark.sql.functions._
   *
   * Every method returns a lazy DataFrame: callers compose further or
   * `.limit(k).collect()` at the API boundary exactly like the reference's
-  * LIMIT'd SQL. Filters are built conditionally (B6) so Catalyst pushes
-  * them into the parquet scan; top-k always goes through
-  * `orderBy(...).limit(k)` which plans as TakeOrderedAndProject — no full
-  * sort at any scale.
+  * LIMIT'd SQL. Filters are built conditionally (B6); top-k always goes
+  * through `orderBy(...).limit(k)` which plans as TakeOrderedAndProject —
+  * no full sort at any scale.
+  *
+  * A request's own value (an id, a date bound, a cutoff) enters a query
+  * through [[EmailSearch.bound]], by reference: the query's generated
+  * classes are then the same for every value, and a warm route compiles
+  * none (`ReadPathJobsSpec`).
   */
 final case class SearchFilters(
     dateFrom: Option[java.sql.Timestamp] = None,
@@ -24,13 +28,15 @@ final case class SearchFilters(
     providerAccount: Option[String] = None)
 
 class EmailSearch(emails: DataFrame) {
+  import EmailSearch.bound
 
   /** B6: NULL-guarded optional predicates (reference:
-    * scripts/migrate_providers.sql:101-105), built conditionally. */
+    * scripts/migrate_providers.sql:101-105), built conditionally. A date
+    * bound passes no undated email, as in SQL. */
   private def applyFilters(df: DataFrame, f: SearchFilters): DataFrame = {
     var out = df
-    f.dateFrom.foreach(d => out = out.filter(col("date") >= lit(d)))
-    f.dateTo.foreach(d => out = out.filter(col("date") <= lit(d)))
+    f.dateFrom.foreach(d => out = out.filter(bound(col("date"), _ >= _, d)))
+    f.dateTo.foreach(d => out = out.filter(bound(col("date"), _ <= _, d)))
     f.provider.foreach(p => out = out.filter(col("provider") === p))
     f.providerAccount.foreach(a => out = out.filter(col("provider_account") === a))
     out
@@ -43,7 +49,7 @@ class EmailSearch(emails: DataFrame) {
     emails.filter(col("message_id") === messageId)
 
   /** B2 (reference: database.py:223-232). */
-  def byId(id: Long): DataFrame = emails.filter(col("id") === id)
+  def byId(id: Long): DataFrame = emails.filter(bound(col("id"), _ === _, id))
 
   /** B3: thread fetch in chronological order (reference: database.py:234-245). */
   def thread(threadId: String): DataFrame =
@@ -58,7 +64,7 @@ class EmailSearch(emails: DataFrame) {
 
   /** B5: range + top-k (reference: database.py:306-319). */
   def since(date: java.sql.Timestamp, limit: Int): DataFrame =
-    emails.filter(col("date") > lit(date)).orderBy(col("date").desc).limit(limit)
+    emails.filter(bound(col("date"), _ > _, date)).orderBy(col("date").desc).limit(limit)
 
   /** B9: recent-N projection (reference: database.py:292-304). */
   def recent(limit: Int): DataFrame =
@@ -93,7 +99,7 @@ class EmailSearch(emails: DataFrame) {
   def patterns(groupBy: String, days: Int = 30,
       now: java.sql.Timestamp = new java.sql.Timestamp(System.currentTimeMillis())): DataFrame = {
     val cutoff = new java.sql.Timestamp(now.getTime - days.toLong * 86400000L)
-    val recent = emails.filter(col("date") >= lit(cutoff))
+    val recent = emails.filter(bound(col("date"), _ >= _, cutoff))
     val keyed = groupBy match {
       case "sender" => recent.withColumn("key", col("sender"))
       case "domain" => recent.withColumn("key", substring_index(col("sender"), "@", -1))
@@ -157,6 +163,17 @@ class EmailSearch(emails: DataFrame) {
 }
 
 object EmailSearch {
+  /** `op(c, v)` for a request's own value `v` (a constant or a foldable
+    * column), true only where `c` is not null. Spark writes a number or
+    * timestamp constant into the class it generates, so each new value
+    * would compile the query's classes anew; here `c` and `v` are compared
+    * as one-field structs, and a struct constant reaches the generated
+    * code by reference. Two such structs compare as their fields do,
+    * except that a struct with a null field sorts first, where SQL
+    * answers null: hence the guard on `c`. */
+  def bound(c: Column, op: (Column, Column) => Column, v: Any): Column =
+    c.isNotNull && op(struct(c), struct(lit(v)))
+
   /** The columns [[EmailSearch.hybridSearch]] returns unless asked for
     * others. Any `emails` column may be asked for: it rides through the
     * top-k, so a caller never joins the hits back to the store. */

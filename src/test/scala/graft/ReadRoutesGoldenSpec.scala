@@ -30,7 +30,10 @@ trait ReadFixture extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   lazy val api: EmailEtlApi = {
     val inbox = tmpDir("read-inbox")
-    write(inbox, "batch.json", lines)
+    // two inbox files, so the store holds two files and a query reads
+    // two partitions, as it does once a store has been synced
+    write(inbox, "batch-1.json", lines.take(4))
+    write(inbox, "batch-2.json", lines.drop(4))
     val a = new EmailEtlApi(spark, tmpDir("read-store"))
     a.importFull(inbox)
     a
@@ -38,7 +41,16 @@ trait ReadFixture extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   lazy val server: com.sun.net.httpserver.HttpServer = RestServer.start(api, port = 0)
 
   /** The response body of one POST, exactly as the server sent it. */
-  def post(path: String, body: String): String = {
+  def post(path: String, body: String): String = ReadFixture.post(this, server, path, body)
+
+  override def afterAll(): Unit = try server.stop(0) finally super.afterAll()
+}
+
+object ReadFixture {
+  /** The response body of one POST to `server`, exactly as it was sent;
+    * `suite` fails unless the status is 200. */
+  def post(suite: org.scalatest.Assertions, server: com.sun.net.httpserver.HttpServer,
+      path: String, body: String): String = {
     val conn = new java.net.URL(s"http://127.0.0.1:${server.getAddress.getPort}$path")
       .openConnection().asInstanceOf[java.net.HttpURLConnection]
     conn.setRequestMethod("POST")
@@ -49,11 +61,9 @@ trait ReadFixture extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val text = new String(
       (if (code < 400) conn.getInputStream else conn.getErrorStream).readAllBytes(), "UTF-8")
     conn.disconnect()
-    assert(code == 200, s"POST $path $body -> $code $text")
+    suite.assert(code == 200, s"POST $path $body -> $code $text")
     text
   }
-
-  override def afterAll(): Unit = try server.stop(0) finally super.afterAll()
 }
 
 object ReadRoutesGoldenSpec {

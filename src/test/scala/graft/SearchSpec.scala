@@ -119,4 +119,45 @@ class SearchSpec extends SparkSpec {
       .select("message_id").as[String].collect()
     assert(got.toSet == Set("m2", "m3"))
   }
+
+  test("a date window never returns an undated email: from only, to only, or both") {
+    // an undated copy of m1 ranks first for m1's query when nothing filters it
+    val undated = emails.filter(col("id") === 1L)
+      .withColumn("id", lit(5L)).withColumn("message_id", lit("m5"))
+      .withColumn("date", lit(null).cast("timestamp"))
+    val withUndated = new EmailSearch(emails.unionByName(undated))
+    val q = vec("spark join tuning")
+    def ids(f: SearchFilters): Set[String] =
+      withUndated.hybridSearch(q, "spark join", k = 10, f)
+        .select("message_id").as[String].collect().toSet
+    val from = Some(ts("2024-01-11 00:00:00"))
+    val to = Some(ts("2024-01-11 23:00:00"))
+    assert(ids(SearchFilters()) == Set("m1", "m2", "m3", "m5"))
+    assert(ids(SearchFilters(dateFrom = from)) == Set("m2", "m3"))
+    assert(ids(SearchFilters(dateTo = to)) == Set("m1", "m2"))
+    assert(ids(SearchFilters(dateFrom = from, dateTo = to)) == Set("m2"))
+
+    // the same through the REST route, over an imported store
+    import ImportFixture._
+    val inbox = tmpDir("window-inbox")
+    write(inbox, "batch.json", Seq(
+      msg("d1", "Fri, 01 Mar 2024 10:00:00 +0000", "budget plan", plain = Some("the budget plan")),
+      msg("d2", "Tue, 05 Mar 2024 10:00:00 +0000", "budget review", plain = Some("review the budget")),
+      msg("u1", "not a date", "budget plan", plain = Some("the budget plan"))))
+    val api = new graft.api.EmailEtlApi(spark, tmpDir("window-store"))
+    api.importFull(inbox)
+    val server = graft.api.RestServer.start(api, port = 0)
+    def rest(window: String): Set[String] = {
+      val body = org.json4s.jackson.JsonMethods.parse(ReadFixture.post(this, server,
+        "/api/search/emails", s"""{"query": "budget plan", "limit": 10$window}"""))
+      (body \ "results" \ "message_id").children.map(_.values.toString).toSet
+    }
+    try {
+      assert(rest("") == Set("d1", "d2", "u1"))
+      assert(rest(""", "date_from": "2024-03-02T00:00:00Z"""") == Set("d2"))
+      assert(rest(""", "date_to": "2024-03-02T00:00:00Z"""") == Set("d1"))
+      assert(rest(""", "date_from": "2024-02-01T00:00:00Z", "date_to": "2024-04-01T00:00:00Z"""") ==
+        Set("d1", "d2"))
+    } finally server.stop(0)
+  }
 }

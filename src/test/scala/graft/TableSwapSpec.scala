@@ -77,14 +77,19 @@ class TableSwapSpec extends SparkSpec {
     write(inbox, "000.json", (0 until 20).flatMap(d => day(d, 5, "m")))
     api.importFull(inbox)
     def files: Seq[String] = TableSwap.liveFiles(spark, s"$store/emails").map(_.name)
+    def auditFiles: Int = TableSwap.liveFiles(spark, s"$store/audit").size
     // the first sync re-reads the newest message, which the import's one
     // file holds; from then on that file is left alone
     write(inbox, "020.json", day(20, 5, "m"))
+    val imported = auditFiles
     api.syncIncremental(inbox)
+    assert(auditFiles <= imported + 1, s"the first sync added ${auditFiles - imported} audit files")
     val oldest = files.head
     (21 until 36).foreach { d =>
       write(inbox, f"$d%03d.json", day(d, 5, "m"))
+      val audited = auditFiles
       val stats = api.syncIncremental(inbox)
+      assert(auditFiles <= audited + 1, s"day $d added ${auditFiles - audited} audit files")
       assert(stats("processed") == 5L && stats("skipped") == 1L, s"day $d: $stats")
       assert(files.head == oldest, s"day $d rewrote the oldest file")
       assert(files.size <= 6, s"day $d left ${files.size} files: ${files.mkString(", ")}")
